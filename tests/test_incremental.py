@@ -604,3 +604,72 @@ def test_compact_index_swap_crash_recovers(reg, spark):
     assert got == want
     assert not tmp2.exists()
     assert not (d.parent / ".data.swapintent.json").exists()
+
+    # --- the same crash window must be repaired by every entry point
+    # that opens the layout, not only by search: extend, and the
+    # maintain() policy (whose index_stats must still see the layout)
+    def crash(d, tag):
+        tmp = d.parent / f".{d.name}.compact-{tag}"
+        _shutil.copytree(d, tmp)
+        (d.parent / f".{d.name}.swapintent.json").write_text(
+            _json.dumps({"tmp": str(tmp), "old": str(d.parent / f".{d.name}.old-{tag}")})
+        )
+        d.rename(d.parent / f".{d.name}.old-{tag}")
+
+    reg.insert_rows("emb", _rows(range(50, 55), seed=96))
+    crash(d, "ext")
+    assert reg.extend_vector_index("emb") == 5
+    assert d.exists()
+    crash(d, "mnt")
+    assert "ivf" in reg.maintain("emb")["before"]
+    assert d.exists()
+
+    # --- sparse and BM25 postings: extend, search and maintain
+    # recover too
+    from vechord_spark.spec import Keyword, SparseVector
+
+    reg.register(
+        TableSpec(
+            "sp",
+            [
+                Column("uid", "int", primary_key=True),
+                Column("body", Keyword()),
+                Column("sv", SparseVector(16)),
+            ],
+        )
+    )
+
+    def sp_row(i, sv):
+        return {"uid": i, "body": f"w{i}", "sv": sv}
+
+    reg.insert_rows("sp", [sp_row(i, ([i % 16], [1.0 + i])) for i in range(8)])
+    reg.build_sparse_index("sp")
+    reg.build_keyword_index("sp")
+    posts = reg._sparse_index_path("sp") / "postings"
+    reg.insert_rows("sp", [sp_row(8, ([3], [9.0]))])
+    crash(posts, "ext")
+    assert reg.extend_sparse_index("sp") == 1
+    kposts = reg._layout_path("sp", "bm25") / "postings"
+    crash(kposts, "ext")
+    assert reg.extend_keyword_index("sp") == 1
+    crash(posts, "srch")
+    assert [r.uid for r in reg.search_by_sparse("sp", {3: 1.0}, topk=1).collect()] == [8]
+    crash(posts, "mnt")
+    assert "sparse" in reg.maintain("sp")["before"]
+    assert posts.exists()
+
+    # --- a LIVE swap (journal written while its compactor holds the
+    # maintenance lock) is not a crash: a concurrent search or
+    # index_stats leaves it alone, and repairs it once abandoned
+    tmp = posts.parent / ".postings.compact-live"
+    _shutil.copytree(posts, tmp)
+    journal = posts.parent / ".postings.swapintent.json"
+    journal.write_text(
+        _json.dumps({"tmp": str(tmp), "old": str(posts.parent / ".postings.old-live")})
+    )
+    with reg._maintenance_lock(posts.parent):
+        assert [r.uid for r in reg.search_by_sparse("sp", {3: 1.0}, topk=1).collect()] == [8]
+        assert "sparse" in reg.index_stats("sp")
+        assert journal.exists() and tmp.exists()
+    assert "sparse" in reg.index_stats("sp")
+    assert not journal.exists() and not tmp.exists() and posts.exists()

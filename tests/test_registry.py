@@ -198,10 +198,19 @@ def test_persisted_bm25_index_search(spark, tmp_path):
             {"uid": 3, "body": "unrelated cooking recipes"},
         ],
     )
+    from vechord_spark.operators.bm25 import bm25_topk
+
     n_postings = reg.build_keyword_index("doc")
     assert n_postings > 0
     plain = sorted(
-        [(r.rank, r.uid, r.score) for r in reg.search_by_keyword("doc", "fast spark", use_index=False).collect()]
+        (r.rank, r.uid, r.score)
+        for r in bm25_topk(
+            reg.load("doc"),
+            doc_id="uid",
+            text_col="body",
+            query="fast spark",
+            select=["uid", "body"],
+        ).collect()
     )
     indexed = sorted(
         [(r.rank, r.uid, r.score) for r in reg.search_by_keyword("doc", "fast spark").collect()]

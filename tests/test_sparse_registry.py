@@ -244,3 +244,76 @@ def test_maintenance_locks_are_per_layout(spark, tmp_path):
         assert r.extend_sparse_index("doc") == 1
     # vector extend goes through once the lock releases
     assert r.extend_vector_index("doc") == 1
+
+
+def test_maintain_prunes_deleted_rows_from_postings_layouts(spark, tmp_path):
+    """DELETE rewrites the table only; maintain() must sweep the
+    deleted docs out of the BM25 and sparse postings too: keyword
+    search ranks 1..k with the scores of a fresh build over the live
+    rows (n_docs, avgdl and df no longer count the deleted docs), and
+    sparse search returns no deleted id. A later compact() re-adopts
+    the sparse ledger like the others, so the next extend stays on
+    the O(appended data) path."""
+    from vechord_spark.spec import AnyOf, Keyword
+
+    spec = TableSpec(
+        "doc",
+        [
+            Column("uid", "int", primary_key=True),
+            Column("body", Keyword()),
+            Column("sv", SparseVector(32)),
+        ],
+    )
+
+    def row(i):
+        body = f"w{i % 7} w{i % 13} common" + (" plantx" if i % 10 == 0 else "")
+        # NULL and empty sparse cells never enter the postings
+        sv = {4: None, 5: ([], [])}.get(i % 50, ([i % 16, 16 + i % 5], [1.0, 1.0 + i % 3]))
+        return {"uid": i, "body": body, "sv": sv}
+
+    def sparse_docs(ids):
+        return sum(1 for i in ids if i % 50 not in (4, 5))
+
+    r = VechordRegistry("ghost", str(tmp_path), spark)
+    r.register(spec)
+    r.insert_rows("doc", [row(i) for i in range(300)])
+    r.build_keyword_index("doc")
+    r.build_sparse_index("doc")
+    assert r.index_stats("doc")["sparse"]["rows"] == sparse_docs(range(300))
+    victims = [i for i in range(300) if i % 10 == 0 and i < 150] + [1, 2, 3]
+    r.remove_by("doc", {"uid": AnyOf(victims)})
+    live = [i for i in range(300) if i not in set(victims)]
+
+    out = r.maintain("doc")
+    pruned = {a["index"]: a["pruned_rows"] for a in out["actions"] if a["op"] == "prune"}
+    assert pruned == {"bm25": len(victims), "sparse": len(victims)}
+    assert out["after"]["bm25"]["rows"] == len(live)
+    assert out["after"]["sparse"]["rows"] == sparse_docs(live)
+    # with the doc counts matching the table, maintain sweeps nothing,
+    # also after appends the ledger extends cover
+    r._prune_postings = lambda *a: pytest.fail("swept a layout without ghosts")
+    assert r.maintain("doc")["actions"] == []
+    r.insert_rows("doc", [row(1000), row(1004)])
+    live += [1000, 1004]
+    assert r.index_stats("doc")["sparse"]["files_behind"] > 0
+    assert r.maintain("doc")["after"]["sparse"]["rows"] == sparse_docs(live)
+    del r._prune_postings
+
+    fresh = VechordRegistry("ghostfresh", str(tmp_path), spark)
+    fresh.register(spec)
+    fresh.insert_rows("doc", [row(i) for i in live])
+    fresh.build_keyword_index("doc")
+    for query in ("plantx", "w3 common"):
+        got = [(x.rank, x.uid, x.score) for x in r.search_by_keyword("doc", query, topk=20).collect()]
+        want = [(x.rank, x.uid, x.score) for x in fresh.search_by_keyword("doc", query, topk=20).collect()]
+        assert [g[0] for g in got] == list(range(1, len(want) + 1))
+        assert [g[1] for g in got] == [w[1] for w in want]
+        assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=1e-9)
+
+    hits = r.search_by_sparse("doc", {0: 1.0, 1: 1.0, 2: 1.0, 3: 1.0}, topk=100, return_fields=["uid"])
+    got = {x.uid for x in hits.collect()}
+    assert got and not got & set(victims)
+
+    r.compact("doc")
+    delta, _ = r._new_rows_since_index("doc", r._sparse_index_path("doc"))
+    assert delta is not None and delta.count() == 0

@@ -318,22 +318,16 @@ class VechordRegistry:
 
     def drop(self, name: str) -> None:
         """DROP TABLE (reference vechord/client.py:382-388) — including
-        every derived index layout (.ivf/.mvivf/.bm25/.sparse). The
-        reference gets index-drops-with-table from Postgres; without
-        this a re-created same-name table would LOAD the stale layouts
-        and probe search would serve the dropped rows."""
+        every derived index layout (:meth:`_layouts`). The reference
+        gets index-drops-with-table from Postgres; without this a
+        re-created same-name table would LOAD the stale layouts and
+        probe search would serve the dropped rows."""
         spec = self._spec(name)
         path = Path(self.table_path(name))
         if path.exists():
             shutil.rmtree(path)
-        for layout in (
-            self._index_path(name),
-            self._mv_index_path(name),
-            self.base_path / f"{self.namespace}_{name}.bm25",
-            self._sparse_index_path(name),
-        ):
-            if layout.exists():
-                shutil.rmtree(layout)
+        for layout in self._layouts(name).values():
+            shutil.rmtree(layout)
         self._column_defaults = {
             k: v for k, v in self._column_defaults.items() if k[0] != name
         }
@@ -1122,122 +1116,138 @@ class VechordRegistry:
         appends for the clustered IVF copies), so a year of daily
         extends leaves the index scan paying thousands of file opens.
 
-        Each existing index directory is rewritten in place with the
-        SAME layout (the IVF/multivec data keeps ``partitionBy(
-        centroid_id)`` — probe pruning untouched; BM25 postings/doclen
-        coalesce flat), via a staged write + directory swap. Row sets
-        are unchanged, so search results are identical (test-pinned)
-        and the TABLE file ledger is untouched (files.json tracks the
+        Each row directory of every built layout (:meth:`_layouts`)
+        is rewritten in place with the SAME layout (the IVF/multivec
+        data keeps ``partitionBy(centroid_id)`` — probe pruning
+        untouched; BM25 postings/doclen coalesce flat; sparse postings
+        stay range-clustered on ``idx``), via a staged write +
+        directory swap (:meth:`_swap_index_dir`). Row sets are
+        unchanged, so search results are identical (test-pinned) and
+        the TABLE file ledger is untouched (files.json tracks the
         table's files, not the index's). Single-writer maintenance,
-        like the extends. Returns per-index file counts after.
+        like the extends. Returns per-directory file counts after,
+        keyed ``<kind>_<dir>_files`` (e.g. ``ivf_data_files``).
 
         Crash contract: the directory swap (live renamed away,
         replacement renamed in) is journaled — a crash inside the
         window leaves a ``.<dir>.swapintent.json`` next to the
-        directory, and :meth:`_recover_index_swap` (run here and by
-        every index load when the live dir is missing) rolls FORWARD
-        from the completed replacement or BACK from the preserved
-        original; the index is never silently lost."""
-        import uuid
-
+        directory, and :meth:`_recover_index_swap` (run by
+        :meth:`_layouts` and :meth:`_open_layout`, so every load,
+        search, extend, maintenance primitive and ``index_stats``)
+        rolls FORWARD from the completed replacement or BACK from the
+        preserved original once the journal is abandoned (its writer's
+        lock released); the index is never silently lost."""
         out: dict[str, int] = {}
-
-        def _rewrite_dir(
-            d: Path, partition: str | None, order_col: str | None = None
-        ) -> int:
-            self._recover_index_swap(d)
-            df = self.spark.read.parquet(str(d))
-            tmp = d.parent / f".{d.name}.compact-{uuid.uuid4().hex}"
-            if partition:
-                # one file per partition value: coalesce within the
-                # partitioned write by repartitioning on the key
-                (
-                    df.repartition(F.col(partition))
-                    .write.partitionBy(partition)
-                    .parquet(str(tmp))
-                )
-            elif order_col is not None:
-                # range-clustered layouts (sparse postings) must come
-                # out of the rewrite still clustered — footer pruning
-                # is their whole point
-                total = sum(
-                    p.stat().st_size for p in d.rglob("*.parquet") if p.is_file()
-                )
-                n_out = max(1, -(-total // (128 << 20)))
-                (
-                    df.repartitionByRange(max(2, n_out), F.col(order_col))
-                    .sortWithinPartitions(order_col)
-                    .write.parquet(str(tmp))
-                )
-            else:
-                total = sum(
-                    p.stat().st_size for p in d.rglob("*.parquet") if p.is_file()
-                )
-                n_out = max(1, -(-total // (128 << 20)))
-                df.coalesce(n_out).write.parquet(str(tmp))
-            old = d.parent / f".{d.name}.old-{uuid.uuid4().hex}"
-            import json
-
-            intent = d.parent / f".{d.name}.swapintent.json"
-            intent.write_text(json.dumps({"tmp": str(tmp), "old": str(old)}))
-            d.rename(old)
-            tmp.rename(d)
-            shutil.rmtree(old)
-            intent.unlink(missing_ok=True)
-            return sum(1 for p in d.rglob("*.parquet") if p.is_file())
-
-        # each layout's rewrite runs under its maintenance lock: a
-        # concurrent extend appending into a directory mid-swap would
-        # land rows in the renamed-away copy and lose them
-        ipath = self._index_path(name)
-        if (ipath / "data").exists():
+        for kind, ipath in self._layouts(name).items():
+            dirs = self._LAYOUT_DIRS[kind]
+            if not (ipath / dirs[0]).exists():
+                continue
+            # each layout's rewrite runs under its maintenance lock: a
+            # concurrent extend appending into a directory mid-swap
+            # would land rows in the renamed-away copy and lose them
             with self._maintenance_lock(ipath):
-                out["ivf_data_files"] = _rewrite_dir(
-                    ipath / "data", "centroid_id"
-                )
-        mpath = self._mv_index_path(name)
-        if (mpath / "data").exists():
-            with self._maintenance_lock(mpath):
-                out["mvivf_data_files"] = _rewrite_dir(
-                    mpath / "data", "centroid_id"
-                )
-        kpath = self.base_path / f"{self.namespace}_{name}.bm25"
-        if (kpath / "postings").exists():
-            with self._maintenance_lock(kpath):
-                out["bm25_postings_files"] = _rewrite_dir(
-                    kpath / "postings", None
-                )
-                out["bm25_doclen_files"] = _rewrite_dir(kpath / "doclen", None)
-        spath = self._sparse_index_path(name)
-        if (spath / "postings").exists():
-            with self._maintenance_lock(spath):
-                out["sparse_postings_files"] = _rewrite_dir(
-                    spath / "postings", None, order_col="idx"
-                )
+                for d in dirs:
+                    out[f"{kind}_{d}_files"] = self._swap_index_dir(
+                        ipath / d, kind
+                    )
         return out
 
-    def _recover_index_swap(self, d: Path) -> None:
-        """Repair a compact_index swap that crashed mid-window (journal
+    def _swap_index_dir(self, d: Path, kind: str, keep=None) -> int:
+        """Rewrite one index row directory in place, keeping its
+        layout kind's file layout: IVF cells one file set per
+        ``centroid_id`` partition, sparse postings range-clustered on
+        ``idx`` (footer pruning is their whole point), BM25 tables
+        coalesced flat. ``keep`` optionally filters the rows
+        (``DataFrame -> DataFrame``; the postings ghost sweep). The
+        staged copy swaps in under the ``.<dir>.swapintent.json``
+        journal (see :meth:`compact_index`). Returns the file count
+        after. The caller holds the layout's maintenance lock."""
+        import json
+        import uuid
+
+        self._recover_index_swap(d.parent, kind, locked=True)
+        df = self.spark.read.parquet(str(d))
+        if keep is not None:
+            df = keep(df)
+        tmp = d.parent / f".{d.name}.compact-{uuid.uuid4().hex}"
+        total = sum(p.stat().st_size for p in d.rglob("*.parquet") if p.is_file())
+        n_out = max(1, -(-total // (128 << 20)))
+        if kind in ("ivf", "mvivf"):
+            # one file per partition value: coalesce within the
+            # partitioned write by repartitioning on the key
+            (
+                df.repartition(F.col("centroid_id"))
+                .write.partitionBy("centroid_id")
+                .parquet(str(tmp))
+            )
+        elif kind == "sparse":
+            (
+                df.repartitionByRange(max(2, n_out), F.col("idx"))
+                .sortWithinPartitions("idx")
+                .write.parquet(str(tmp))
+            )
+        else:
+            df.coalesce(n_out).write.parquet(str(tmp))
+        old = d.parent / f".{d.name}.old-{uuid.uuid4().hex}"
+        intent = d.parent / f".{d.name}.swapintent.json"
+        intent.write_text(json.dumps({"tmp": str(tmp), "old": str(old)}))
+        d.rename(old)
+        tmp.rename(d)
+        shutil.rmtree(old)
+        intent.unlink(missing_ok=True)
+        return sum(1 for p in d.rglob("*.parquet") if p.is_file())
+
+    def _recover_index_swap(
+        self, ipath: Path, kind: str, *, locked: bool = False
+    ) -> None:
+        """Repair a compact_index swap that crashed mid-window in any
+        row directory of the ``kind`` layout at ``ipath`` (journal
         ``.<dir>.swapintent.json`` present). Roll FORWARD when the
         completed replacement exists (its write finished before the
         journal was written), else BACK from the preserved original;
-        leftovers are removed either way. No-op without a journal."""
+        leftovers are removed either way. No-op without a journal.
+
+        Like :meth:`_recover_recluster`, recovery acts only on
+        ABANDONED journals: it takes the maintenance lock
+        non-blockingly first, so a LIVE swap (journaled while its
+        writer holds the lock) is never rolled back under it by a
+        concurrent search, load or ``index_stats``. ``locked=True`` is
+        for callers that already hold the lock."""
         import json
 
-        intent = d.parent / f".{d.name}.swapintent.json"
-        if not intent.exists():
+        journaled = [
+            ipath / d
+            for d in self._LAYOUT_DIRS[kind]
+            if (ipath / f".{d}.swapintent.json").exists()
+        ]
+        if not journaled:
             return
-        rec = json.loads(intent.read_text())
-        tmp, old = Path(rec["tmp"]), Path(rec["old"])
-        if not d.exists():
-            if tmp.exists():
-                tmp.rename(d)  # forward: replacement is complete
-            elif old.exists():
-                old.rename(d)  # back: original preserved
-        for leftover in (tmp, old):
-            if leftover.exists():
-                shutil.rmtree(leftover)
-        intent.unlink(missing_ok=True)
+
+        def _repair() -> None:
+            for d in journaled:
+                intent = ipath / f".{d.name}.swapintent.json"
+                if not intent.exists():
+                    continue  # the writer finished before we locked
+                rec = json.loads(intent.read_text())
+                tmp, old = Path(rec["tmp"]), Path(rec["old"])
+                if not d.exists():
+                    if tmp.exists():
+                        tmp.rename(d)  # forward: replacement is complete
+                    elif old.exists():
+                        old.rename(d)  # back: original preserved
+                for leftover in (tmp, old):
+                    if leftover.exists():
+                        shutil.rmtree(leftover)
+                intent.unlink(missing_ok=True)
+
+        if locked:
+            _repair()
+            return
+        try:
+            with self._maintenance_lock(ipath):
+                _repair()
+        except MaintenanceBusy:
+            return  # a live compactor owns the journal
 
     def _extend_indexes_for_rewrite(self, name: str) -> list[Path]:
         """Bring every existing index of ``name`` current (O(appended
@@ -1250,29 +1260,22 @@ class VechordRegistry:
         is NOT snapshotted after the rewrite, and the next extend from
         a fully-specified registry re-adopts it via the anti-join."""
         ledgered: list[Path] = []
-        for ipath, extend in (
-            (self._index_path(name), self.extend_vector_index),
-            (self._mv_index_path(name), self.extend_multivec_index),
-            (
-                self.base_path / f"{self.namespace}_{name}.bm25",
-                self.extend_keyword_index,
-            ),
-        ):
-            if ipath.exists():
-                try:
-                    extend(name)
-                except SchemaError:
-                    continue  # spec can't extend this index: leave its
-                    # ledger alone (snapshotting would claim unindexed
-                    # rows as covered)
-                except MaintenanceBusy:
-                    continue  # another session is extending this index
-                    # RIGHT NOW: its in-flight ledger record will go
-                    # stale the moment our rewrite lands, and the next
-                    # extend re-adopts via the anti-join — skipping is
-                    # the safe move (snapshotting would claim rows the
-                    # concurrent extend hasn't appended yet)
-                ledgered.append(ipath)
+        extenders = self._extenders()
+        for kind, ipath in self._layouts(name).items():
+            try:
+                extenders[kind](name)
+            except SchemaError:
+                continue  # spec can't extend this index: leave its
+                # ledger alone (snapshotting would claim unindexed
+                # rows as covered)
+            except MaintenanceBusy:
+                continue  # another session is extending this index
+                # RIGHT NOW: its in-flight ledger record will go
+                # stale the moment our rewrite lands, and the next
+                # extend re-adopts via the anti-join — skipping is
+                # the safe move (snapshotting would claim rows the
+                # concurrent extend hasn't appended yet)
+            ledgered.append(ipath)
         return ledgered
 
     def _snapshot_index_ledgers(
@@ -1492,8 +1495,109 @@ class VechordRegistry:
             sorted(seen | set(fresh)),
         )
 
+    # every derived layout a table can have, by kind (also the
+    # directory suffix): its row directories, the first marking the
+    # layout as built. Iteration order is the order maintenance and
+    # index_stats report the layouts in.
+    _LAYOUT_DIRS = {
+        "ivf": ("data",),
+        "mvivf": ("data",),
+        "bm25": ("postings", "doclen"),
+        "sparse": ("postings",),
+    }
+    # layouts opened through _open_layout: (spec attribute of the
+    # indexed column, column noun, layout noun, build method)
+    _OPENED_LAYOUTS = {
+        "ivf": ("vector_column", "vector", "IVF", "build_vector_index"),
+        "mvivf": (
+            "multivec_column",
+            "multivector",
+            "multivector IVF",
+            "build_multivec_index",
+        ),
+        "sparse": ("sparse_column", "sparse vector", "sparse", "build_sparse_index"),
+    }
+
+    def _layout_path(self, name: str, kind: str) -> Path:
+        return self.base_path / f"{self.namespace}_{name}.{kind}"
+
     def _index_path(self, name: str) -> Path:
-        return self.base_path / f"{self.namespace}_{name}.ivf"
+        return self._layout_path(name, "ivf")
+
+    def _mv_index_path(self, name: str) -> Path:
+        return self._layout_path(name, "mvivf")
+
+    def _sparse_index_path(self, name: str) -> Path:
+        return self._layout_path(name, "sparse")
+
+    def _layouts(self, name: str) -> dict[str, Path]:
+        """kind -> directory of every index layout ``name`` has on
+        disk, after repairing any compact_index swap that crashed in
+        one of its row directories (so a layout caught mid-swap is
+        reported, maintained and dropped, never skipped)."""
+        out: dict[str, Path] = {}
+        for kind in self._LAYOUT_DIRS:
+            ipath = self._layout_path(name, kind)
+            if ipath.exists():
+                self._recover_index_swap(ipath, kind)
+                out[kind] = ipath
+        return out
+
+    def _open_layout(self, name: str, kind: str, *, locked: bool = False):
+        """``(column, layout dir)`` of a built ivf / mvivf / sparse
+        layout — the entry check of every load, extend and
+        maintenance primitive: the spec must declare the indexed
+        column, a crashed compact_index swap and an abandoned
+        recluster are repaired (``locked``: the caller already holds
+        the layout's maintenance lock, see :meth:`_recover_recluster`),
+        and a never-built layout raises :class:`SchemaError`."""
+        attr, col_noun, layout_noun, build = self._OPENED_LAYOUTS[kind]
+        col = getattr(self._spec(name), attr)
+        if col is None:
+            raise SchemaError(f"table {name} has no {col_noun} column")
+        ipath = self._layout_path(name, kind)
+        self._recover_index_swap(ipath, kind, locked=locked)
+        self._recover_recluster(ipath, locked=locked)
+        if not (ipath / self._LAYOUT_DIRS[kind][0]).exists():
+            raise SchemaError(
+                f"no {layout_noun} index for {name}; call {build} first"
+            )
+        return col, ipath
+
+    def _extenders(self) -> dict:
+        """kind -> the public extend_* of that layout."""
+        return {
+            "ivf": self.extend_vector_index,
+            "mvivf": self.extend_multivec_index,
+            "bm25": self.extend_keyword_index,
+            "sparse": self.extend_sparse_index,
+        }
+
+    def _read_centroids(self, path: Path):
+        """A persisted centroid table as a (lists, dim) float64
+        matrix; row i is ``centroid_id`` i (ids stay contiguous across
+        every maintenance primitive)."""
+        import numpy as np
+
+        rows = self.spark.read.parquet(str(path)).orderBy("centroid_id").collect()
+        return np.array([r.vec for r in rows])
+
+    def _write_centroids(self, path: Path, cents) -> None:
+        """Persist ``(centroid_id, vector)`` pairs as a centroid table."""
+        self.spark.createDataFrame(
+            [(int(i), [float(x) for x in v]) for i, v in cents],
+            "centroid_id int, vec array<double>",
+        ).write.parquet(str(path))
+
+    @staticmethod
+    def _cell_counts(data: DataFrame) -> dict:
+        """centroid_id -> row count of a clustered layout."""
+        return {
+            r["centroid_id"]: r["n"]
+            for r in data.groupBy("centroid_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
 
     def build_vector_index(
         self,
@@ -1718,11 +1822,7 @@ class VechordRegistry:
             )
         else:
             index.write_clustered(str(ipath / "data"))
-        cents = self.spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(index.centroids)],
-            "centroid_id int, vec array<double>",
-        )
-        cents.write.parquet(str(ipath / "centroids"))
+        self._write_centroids(ipath / "centroids", enumerate(index.centroids))
         import json
 
         if rotation is not None:
@@ -1825,32 +1925,16 @@ class VechordRegistry:
             return self._extend_vector_index_locked(name)
 
     def _extend_vector_index_locked(self, name: str) -> int:
-        import numpy as np
-
         from vechord_spark.operators.ivf import assign_centroids
 
-        spec = self._spec(name)
-        vec_col = spec.vector_column
-        if vec_col is None:
-            raise SchemaError(f"table {name} has no vector column")
-        pk = spec.primary_key
-        if pk is None:
-            raise SchemaError(f"extend_vector_index needs a primary key")
-        ipath = self._index_path(name)
         # caller (extend_vector_index) holds the maintenance lock, so
         # any journal is abandoned — recover in-lock, not via a second
         # flock that our own lock would deny (see _recover_recluster)
-        self._recover_recluster(ipath, locked=True)
-        if not (ipath / "data").exists():
-            raise SchemaError(
-                f"no IVF index for {name}; call build_vector_index first"
-            )
-        rows = (
-            self.spark.read.parquet(str(ipath / "centroids"))
-            .orderBy("centroid_id")
-            .collect()
-        )
-        centroids = np.array([r.vec for r in rows])
+        vec_col, ipath = self._open_layout(name, "ivf", locked=True)
+        pk = self._spec(name).primary_key
+        if pk is None:
+            raise SchemaError(f"extend_vector_index needs a primary key")
+        centroids = self._read_centroids(ipath / "centroids")
         # file-ledger fast path: read ONLY files appended since the
         # index last saw the table (O(new data)); fall back to the pk
         # anti-join when the ledger cannot prove append-only history
@@ -1879,42 +1963,56 @@ class VechordRegistry:
             centroids,
             normalize=bool(self._vector_index_meta(ipath).get("spherical")),
         )
-        book = self._load_codebooks(ipath)
-        if book is not None:
-            from vechord_spark.operators.pq import encode_pq
-
-            # residual layout: the delta's codes are offsets from the
-            # centroid each row was just assigned to
-            fresh = encode_pq(
-                fresh,
-                vec_col.name,
-                book,
-                centroids=centroids
-                if self._vector_index_meta(ipath).get("residual")
-                else None,
-            )
-        rq = self._load_rabitq_rotation(ipath)
-        if rq is not None:
-            from vechord_spark.operators.rabitq import encode_rabitq
-
-            # rabitq layout: bit-encode the delta against its assigned
-            # centroid — the rotation is corpus-independent, so extend
-            # can never stale any trained state
-            fresh = encode_rabitq(
-                fresh,
-                vec_col.name,
-                centroids,
-                rq,
-                normalize=bool(
-                    self._vector_index_meta(ipath).get("spherical")
-                ),
-            )
+        encode = self._reencoder(ipath, vec_col.name)
+        if encode is not None:
+            # quantized layout: the delta gets codes from the EXISTING
+            # codebooks / rotation (residual and RaBitQ codes against
+            # the centroid each row was just assigned to)
+            fresh = encode(fresh, centroids)
         self._mark_extend_intent(ipath)
         fresh.write.mode("append").partitionBy("centroid_id").parquet(
             str(ipath / "data")
         )
         self._record_index_files(name, ipath, files=covered)
         return n_new
+
+    def _reencoder(self, ipath: Path, vec_col: str):
+        """The code encoder of a quantized IVF layout, ``(rows,
+        centroid matrix) -> rows`` with fresh codes (any old code
+        columns dropped first), or None for a plain layout. PQ codes
+        use the persisted codebooks (offsets from the row's cell
+        centroid on residual layouts, raw vectors otherwise); RaBitQ
+        codes use the persisted rotation against the row's cell
+        centroid. Codebooks load when the encoder runs, so building
+        one that is never called costs no Spark job."""
+        meta = self._vector_index_meta(ipath)
+        if (ipath / "codebooks").exists():
+            from vechord_spark.operators.pq import encode_pq
+
+            residual = bool(meta.get("residual"))
+
+            def encode(df: DataFrame, cents) -> DataFrame:
+                return encode_pq(
+                    df.drop("__pq"),
+                    vec_col,
+                    self._load_codebooks(ipath),
+                    centroids=cents if residual else None,
+                )
+
+            return encode
+        if meta.get("rabitq"):
+            from vechord_spark.operators.rabitq import encode_rabitq
+
+            rot = self._load_rabitq_rotation(ipath)
+            spherical = bool(meta.get("spherical"))
+            return lambda df, cents: encode_rabitq(  # noqa: E731
+                df.drop("__rq_code", "__rq_norm", "__rq_dot"),
+                vec_col,
+                cents,
+                rot,
+                normalize=spherical,
+            )
+        return None
 
     def recluster_vector_index(
         self,
@@ -1941,9 +2039,11 @@ class VechordRegistry:
 
         Id discipline: probe search maps centroid-array POSITIONS to
         partition ids, so ids stay contiguous — child 0 keeps the
-        parent's id, child 1 appends at the end. PQ codes are
-        per-vector, not per-cell, so a PQ layout's ``__pq`` column
-        rides through reassignment unchanged.
+        parent's id, child 1 appends at the end. Raw-vector PQ codes
+        are per-vector, not per-cell, so their ``__pq`` column rides
+        through reassignment unchanged; residual-PQ and RaBitQ codes
+        are offsets from the cell centroid, so the moved rows
+        re-encode against their child centroid in the same pass.
 
         Crash contract: the staged data dir and centroid table swap in
         under a ``recluster.intent.json`` journal; recovery
@@ -1953,187 +2053,143 @@ class VechordRegistry:
         Holds the maintenance lock. Returns ``{"split_cells",
         "moved_rows", "lists"}``.
         """
-        import json
-        import os
-        import uuid
-
         import numpy as np
+
+        vec_col, ipath = self._open_layout(name, "ivf")
+        with self._maintenance_lock(ipath):
+            meta = self._vector_index_meta(ipath)
+            spherical = bool(meta.get("spherical"))
+
+            def point(vals):
+                x = np.array(list(vals), dtype=np.float64)
+                if spherical and len(x):
+                    x = x / np.maximum(
+                        np.linalg.norm(x, axis=1, keepdims=True), 1e-30
+                    )
+                return x
+
+            return self._recluster_cells_locked(
+                ipath,
+                vec_col.name,
+                point,
+                max_cell_factor,
+                max_iter,
+                max_train_points,
+                # every row of a split cell gets a NEW centroid: codes
+                # based on the centroid (residual PQ, RaBitQ) go stale
+                reencode=self._reencoder(ipath, vec_col.name)
+                if meta.get("residual") or meta.get("rabitq")
+                else None,
+            )
+
+    def _recluster_cells_locked(
+        self,
+        ipath: Path,
+        col: str,
+        point,
+        max_cell_factor: float,
+        max_iter: int,
+        max_train_points: int,
+        reencode=None,
+    ) -> dict[str, int]:
+        """The targeted split shared by the vector and multivector
+        layouts (see :meth:`recluster_vector_index`). ``point`` maps a
+        sequence of ``col`` values to their (n, d) float64 points in
+        centroid space — the vector (unit-normalized on spherical
+        layouts) or the multivector's token mean; it runs both on the
+        driver's split sample and inside the reassignment UDF, so the
+        split and the assignment see the same geometry. ``reencode``
+        (residual-base layouts): ``(moved_rows, new_centroid_matrix)
+        -> rows`` re-encoding the moved rows' codes — those partitions
+        rewrite anyway; untouched cells keep centroid AND codes, so
+        their hardlinks stay sound. The caller holds the maintenance
+        lock."""
+        import numpy as np
+
+        from pyspark.sql.functions import pandas_udf
 
         from vechord_spark.operators.pq import _lloyd
 
-        spec = self._spec(name)
-        vec_col = spec.vector_column
-        if vec_col is None:
-            raise SchemaError(f"table {name} has no vector column")
-        ipath = self._index_path(name)
-        self._recover_recluster(ipath)
-        if not (ipath / "data").exists():
-            raise SchemaError(
-                f"no IVF index for {name}; call build_vector_index first"
-            )
-        with self._maintenance_lock(ipath):
-            spherical = bool(self._vector_index_meta(ipath).get("spherical"))
-            data = self.spark.read.parquet(str(ipath / "data"))
-            cent_rows = (
-                self.spark.read.parquet(str(ipath / "centroids"))
-                .orderBy("centroid_id")
-                .collect()
-            )
-            lists = len(cent_rows)
-            counts = {
-                r["centroid_id"]: r["n"]
-                for r in data.groupBy("centroid_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            n_total = sum(counts.values())
-            if n_total == 0:
-                return {"split_cells": 0, "moved_rows": 0, "lists": lists}
-            mean = n_total / max(1, lists)
-            oversized = sorted(
-                c
-                for c, n in counts.items()
-                if n > max_cell_factor * mean and n >= 2
-            )
-            if not oversized:
-                return {"split_cells": 0, "moved_rows": 0, "lists": lists}
-
-            rng = np.random.default_rng(42)
-            vname = vec_col.name
-            split: dict[int, tuple] = {}  # old id -> (children(2,d), new_id)
-            next_id = lists
-            for c in oversized:
-                # hash-ordered limit, same contract as build_ivf's fit
-                # sample: limit() alone returns whichever partitions
-                # answer first, so the 2-means split (and the healed
-                # layout's quality) would depend on file layout —
-                # observed as a real heal-quality regression when the
-                # parquet write codec changed the file sizes. Ordering
-                # by xxhash64 compiles to TakeOrderedAndProject and is
-                # deterministic on any layout.
-                vecs = [
-                    r["__v"]
-                    for r in data.filter(F.col("centroid_id") == c)
-                    .select(F.col(vname).alias("__v"))
-                    .orderBy(F.xxhash64(F.col("__v")).asc())
-                    .limit(max_train_points)
-                    .collect()
-                ]
-                x = np.asarray(vecs, dtype=np.float64)
-                if spherical:
-                    x = x / np.maximum(
-                        np.linalg.norm(x, axis=1, keepdims=True), 1e-30
-                    )
-                children = _lloyd(x, 2, rng, max_iter, pad_to=2)
-                split[c] = (children, next_id)
-                next_id += 1
-
-            # one distributed pass: rows of split cells pick their
-            # child; everything else is untouched (and never read)
-            from pyspark.sql.functions import pandas_udf
-
-            sp = {int(c): (ch, int(nid)) for c, (ch, nid) in split.items()}
-            is_sph = spherical
-
-            @pandas_udf("int")
-            def _child(cid: pd.Series, vecs: pd.Series) -> pd.Series:
-                out = np.empty(len(cid), dtype=np.int32)
-                x = np.array(vecs.tolist(), dtype=np.float64)
-                if is_sph and len(x):
-                    x = x / np.maximum(
-                        np.linalg.norm(x, axis=1, keepdims=True), 1e-30
-                    )
-                cvals = cid.to_numpy()
-                for c, (ch, nid) in sp.items():
-                    mask = cvals == c
-                    if not mask.any():
-                        continue
-                    d0 = ((x[mask] - ch[0]) ** 2).sum(axis=1)
-                    d1 = ((x[mask] - ch[1]) ** 2).sum(axis=1)
-                    out[mask] = np.where(d0 <= d1, c, nid)
-                return pd.Series(out)
-
-            moved = data.filter(F.col("centroid_id").isin(list(split)))
-            moved_n = moved.count()
-            reassigned = moved.withColumn(
-                "centroid_id", _child(F.col("centroid_id"), F.col(vname))
-            )
-            meta = self._vector_index_meta(ipath)
-            if meta.get("residual") or meta.get("rabitq"):
-                # residual-base codes (residual PQ and RaBitQ both
-                # encode against centroid[cell]): every row of a split
-                # cell gets a NEW base (child 0 replaces the parent's
-                # centroid, child 1 appends), so the moved rows
-                # re-encode against the post-split centroid table. These
-                # partitions rewrite anyway — the re-encode rides the
-                # same pass; untouched cells keep centroid AND codes,
-                # so their hardlinks stay sound.
-                new_mat = np.array(
-                    [
-                        split[r["centroid_id"]][0][0]
-                        if r["centroid_id"] in split
-                        else r["vec"]
-                        for r in cent_rows
-                    ]
-                    + [
-                        ch[1]
-                        for _, (ch, nid) in sorted(
-                            split.items(), key=lambda kv: kv[1][1]
-                        )
-                    ],
-                    dtype=np.float64,
-                )
-                if meta.get("residual"):
-                    from vechord_spark.operators.pq import encode_pq
-
-                    book = self._load_codebooks(ipath)
-                    reassigned = encode_pq(
-                        reassigned.drop("__pq"), vname, book, centroids=new_mat
-                    )
-                else:
-                    from vechord_spark.operators.rabitq import encode_rabitq
-
-                    reassigned = encode_rabitq(
-                        reassigned.drop(
-                            "__rq_code", "__rq_norm", "__rq_dot"
-                        ),
-                        vname,
-                        new_mat,
-                        self._load_rabitq_rotation(ipath),
-                        normalize=bool(meta.get("spherical")),
-                    )
-
-            self._swap_recluster_layout(ipath, reassigned, split, cent_rows)
-            return {
-                "split_cells": len(split),
-                "moved_rows": int(moved_n),
-                "lists": int(next_id),
-            }
-
-    def _swap_recluster_layout(
-        self, ipath: Path, reassigned: DataFrame, split: dict, cent_rows
-    ) -> None:
-        """The stage/journal/swap half of a targeted recluster, shared
-        by the vector and multivector layouts (identical directory
-        shapes): write reassigned partitions to a stage, HARDLINK every
-        untouched partition, stage the updated centroid table, then
-        swap (see :meth:`_swap_cells_layout`, which prune/merge share
-        with their own cell sets)."""
-        new_cents = [
-            (
-                r["centroid_id"],
-                list(split[r["centroid_id"]][0][0])
-                if r["centroid_id"] in split
-                else list(r["vec"]),
-            )
-            for r in cent_rows
-        ] + [
-            (nid, list(ch[1]))
-            for _, (ch, nid) in sorted(split.items(), key=lambda kv: kv[1][1])
-        ]
-        self._swap_cells_layout(
-            ipath, new_cents, reassigned=reassigned, exclude=set(split)
+        data = self.spark.read.parquet(str(ipath / "data"))
+        cents = self._read_centroids(ipath / "centroids")
+        lists = len(cents)
+        counts = self._cell_counts(data)
+        n_total = sum(counts.values())
+        if n_total == 0:
+            return {"split_cells": 0, "moved_rows": 0, "lists": lists}
+        mean = n_total / max(1, lists)
+        oversized = sorted(
+            c for c, n in counts.items() if n > max_cell_factor * mean and n >= 2
         )
+        if not oversized:
+            return {"split_cells": 0, "moved_rows": 0, "lists": lists}
+
+        rng = np.random.default_rng(42)
+        split: dict[int, tuple] = {}  # old id -> (children(2,d), new_id)
+        next_id = lists
+        for c in oversized:
+            # hash-ordered limit, same contract as build_ivf's fit
+            # sample: limit() alone returns whichever partitions
+            # answer first, so the 2-means split (and the healed
+            # layout's quality) would depend on file layout —
+            # observed as a real heal-quality regression when the
+            # parquet write codec changed the file sizes. Ordering
+            # by xxhash64 compiles to TakeOrderedAndProject and is
+            # deterministic on any layout.
+            vals = [
+                r["__v"]
+                for r in data.filter(F.col("centroid_id") == c)
+                .select(F.col(col).alias("__v"))
+                .orderBy(F.xxhash64(F.col("__v")).asc())
+                .limit(max_train_points)
+                .collect()
+            ]
+            split[c] = (_lloyd(point(vals), 2, rng, max_iter, pad_to=2), next_id)
+            next_id += 1
+
+        # one distributed pass: rows of split cells pick their
+        # child; everything else is untouched (and never read)
+        sp = {int(c): (ch, int(nid)) for c, (ch, nid) in split.items()}
+
+        @pandas_udf("int")
+        def _child(cid: pd.Series, vals: pd.Series) -> pd.Series:
+            out = np.empty(len(cid), dtype=np.int32)
+            x = point(vals)
+            cvals = cid.to_numpy()
+            for c, (ch, nid) in sp.items():
+                mask = cvals == c
+                if not mask.any():
+                    continue
+                d0 = ((x[mask] - ch[0]) ** 2).sum(axis=1)
+                d1 = ((x[mask] - ch[1]) ** 2).sum(axis=1)
+                out[mask] = np.where(d0 <= d1, c, nid)
+            return pd.Series(out)
+
+        moved = data.filter(F.col("centroid_id").isin(list(split)))
+        moved_n = moved.count()
+        reassigned = moved.withColumn(
+            "centroid_id", _child(F.col("centroid_id"), F.col(col))
+        )
+        # child 0 replaces its parent's centroid, child 1 appends
+        # (split ids were handed out in insertion order)
+        new_mat = np.array(
+            [split[c][0][0] if c in split else v for c, v in enumerate(cents)]
+            + [ch[1] for ch, _ in split.values()],
+            dtype=np.float64,
+        )
+        if reencode is not None:
+            reassigned = reencode(reassigned, new_mat)
+        self._swap_cells_layout(
+            ipath,
+            list(enumerate(new_mat)),
+            reassigned=reassigned,
+            exclude=set(split),
+        )
+        return {
+            "split_cells": len(split),
+            "moved_rows": int(moved_n),
+            "lists": int(next_id),
+        }
 
     def _swap_cells_layout(
         self,
@@ -2199,10 +2255,7 @@ class VechordRegistry:
                         # stay safe on collision
                         dest = tgt / f"m{cid}-{f.name}"
                     os.link(f, dest)
-        self.spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in new_cents],
-            "centroid_id int, vec array<double>",
-        ).write.parquet(str(stage_cents))
+        self._write_centroids(stage_cents, new_cents)
 
         trash_data = ipath / f".recluster-old-data-{run}"
         trash_cents = ipath / f".recluster-old-centroids-{run}"
@@ -2243,112 +2296,26 @@ class VechordRegistry:
         Same maintenance lock + rollback-only journal."""
         import numpy as np
 
-        from vechord_spark.operators.pq import _lloyd
+        mv_col, ipath = self._open_layout(name, "mvivf")
 
-        spec = self._spec(name)
-        mv_col = spec.multivec_column
-        if mv_col is None:
-            raise SchemaError(f"table {name} has no multivector column")
-        ipath = self._mv_index_path(name)
-        self._recover_recluster(ipath)
-        if not (ipath / "data").exists():
-            raise SchemaError(
-                f"no multivector IVF index for {name}; "
-                "call build_multivec_index first"
+        def point(vals):
+            # Arrow hands array<array<float>> over as object arrays of
+            # arrays — stack the token vectors per row
+            return np.array(
+                [
+                    np.mean(
+                        np.stack([np.asarray(t, dtype=np.float64) for t in m]),
+                        axis=0,
+                    )
+                    for m in vals
+                ]
             )
+
         with self._maintenance_lock(ipath):
-            data = self.spark.read.parquet(str(ipath / "data"))
-            cent_rows = (
-                self.spark.read.parquet(str(ipath / "centroids"))
-                .orderBy("centroid_id")
-                .collect()
+            return self._recluster_cells_locked(
+                ipath, mv_col.name, point, max_cell_factor, max_iter,
+                max_train_points,
             )
-            lists = len(cent_rows)
-            counts = {
-                r["centroid_id"]: r["n"]
-                for r in data.groupBy("centroid_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            n_total = sum(counts.values())
-            if n_total == 0:
-                return {"split_cells": 0, "moved_rows": 0, "lists": lists}
-            mean = n_total / max(1, lists)
-            oversized = sorted(
-                c
-                for c, n in counts.items()
-                if n > max_cell_factor * mean and n >= 2
-            )
-            if not oversized:
-                return {"split_cells": 0, "moved_rows": 0, "lists": lists}
-
-            rng = np.random.default_rng(42)
-            mvname = mv_col.name
-            split: dict[int, tuple] = {}
-            next_id = lists
-            for c in oversized:
-                # hash-ordered limit (see the vector recluster above):
-                # deterministic split sample on any file layout
-                rows_ = (
-                    data.filter(F.col("centroid_id") == c)
-                    .select(F.col(mvname).alias("__mv"))
-                    .orderBy(F.xxhash64(F.col("__mv")).asc())
-                    .limit(max_train_points)
-                    .collect()
-                )
-                x = np.array(
-                    [np.mean(np.asarray(r["__mv"], dtype=np.float64), axis=0)
-                     for r in rows_]
-                )
-                split[c] = (_lloyd(x, 2, rng, max_iter, pad_to=2), next_id)
-                next_id += 1
-
-            from pyspark.sql.functions import pandas_udf
-
-            sp = {int(c): (ch, int(nid)) for c, (ch, nid) in split.items()}
-
-            @pandas_udf("int")
-            def _child(cid: pd.Series, mvs: pd.Series) -> pd.Series:
-                import numpy as _np
-
-                out = _np.empty(len(cid), dtype=_np.int32)
-                # Arrow hands array<array<float>> over as object
-                # arrays of arrays — stack the token vectors per row
-                means = _np.array(
-                    [
-                        _np.mean(
-                            _np.stack(
-                                [
-                                    _np.asarray(t, dtype=_np.float64)
-                                    for t in m
-                                ]
-                            ),
-                            axis=0,
-                        )
-                        for m in mvs
-                    ]
-                )
-                cvals = cid.to_numpy()
-                for c, (ch, nid) in sp.items():
-                    mask = cvals == c
-                    if not mask.any():
-                        continue
-                    d0 = ((means[mask] - ch[0]) ** 2).sum(axis=1)
-                    d1 = ((means[mask] - ch[1]) ** 2).sum(axis=1)
-                    out[mask] = _np.where(d0 <= d1, c, nid)
-                return pd.Series(out)
-
-            moved = data.filter(F.col("centroid_id").isin(list(split)))
-            moved_n = moved.count()
-            reassigned = moved.withColumn(
-                "centroid_id", _child(F.col("centroid_id"), F.col(mvname))
-            )
-            self._swap_recluster_layout(ipath, reassigned, split, cent_rows)
-            return {
-                "split_cells": len(split),
-                "moved_rows": int(moved_n),
-                "lists": int(next_id),
-            }
 
     def merge_vector_index(
         self, name: str, min_cell_factor: float = 4.0, min_lists: int = 1
@@ -2374,44 +2341,17 @@ class VechordRegistry:
         cell's contents). Same maintenance lock + rollback-only
         journal as recluster. Returns ``{"merged_cells", "moved_rows",
         "lists"}``."""
-        spec = self._spec(name)
-        if spec.vector_column is None:
-            raise SchemaError(f"table {name} has no vector column")
-        ipath = self._index_path(name)
-        self._recover_recluster(ipath)
-        if not (ipath / "data").exists():
-            raise SchemaError(
-                f"no IVF index for {name}; call build_vector_index first"
-            )
+        vec_col, ipath = self._open_layout(name, "ivf")
         with self._maintenance_lock(ipath):
             meta = self._vector_index_meta(ipath)
-            reencode = None
-            vname = spec.vector_column.name
-            if meta.get("residual"):
-                from vechord_spark.operators.pq import encode_pq
-
-                book = self._load_codebooks(ipath)
-                reencode = lambda df, cm: encode_pq(  # noqa: E731
-                    df.drop("__pq"), vname, book, centroids=cm
-                )
-            elif meta.get("rabitq"):
-                from vechord_spark.operators.rabitq import encode_rabitq
-
-                rq = self._load_rabitq_rotation(ipath)
-                rq_sph = bool(meta.get("spherical"))
-                reencode = lambda df, cm: encode_rabitq(  # noqa: E731
-                    df.drop("__rq_code", "__rq_norm", "__rq_dot"),
-                    vname,
-                    cm,
-                    rq,
-                    normalize=rq_sph,
-                )
             return self._merge_cells_locked(
                 ipath,
                 min_cell_factor,
                 min_lists,
                 bool(meta.get("spherical")),
-                reencode=reencode,
+                reencode=self._reencoder(ipath, vec_col.name)
+                if meta.get("residual") or meta.get("rabitq")
+                else None,
             )
 
     def merge_multivec_index(
@@ -2420,16 +2360,7 @@ class VechordRegistry:
         """The multivector twin of :meth:`merge_vector_index` — same
         pure-hardlink cell fold over the mean-space centroid table
         (token-centroid sets are row-level and ride through)."""
-        spec = self._spec(name)
-        if spec.multivec_column is None:
-            raise SchemaError(f"table {name} has no multivector column")
-        ipath = self._mv_index_path(name)
-        self._recover_recluster(ipath)
-        if not (ipath / "data").exists():
-            raise SchemaError(
-                f"no multivector IVF index for {name}; "
-                "call build_multivec_index first"
-            )
+        _, ipath = self._open_layout(name, "mvivf")
         with self._maintenance_lock(ipath):
             return self._merge_cells_locked(ipath, min_cell_factor, min_lists, False)
 
@@ -2451,18 +2382,9 @@ class VechordRegistry:
         import numpy as np
 
         data = self.spark.read.parquet(str(ipath / "data"))
-        cent_rows = (
-            self.spark.read.parquet(str(ipath / "centroids"))
-            .orderBy("centroid_id")
-            .collect()
-        )
-        lists = len(cent_rows)
-        got = {
-            r["centroid_id"]: r["n"]
-            for r in data.groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        cents = self._read_centroids(ipath / "centroids")
+        lists = len(cents)
+        got = self._cell_counts(data)
         counts = {c: int(got.get(c, 0)) for c in range(lists)}
         n_total = sum(counts.values())
         if n_total == 0 or lists <= max(1, min_lists):
@@ -2481,7 +2403,6 @@ class VechordRegistry:
         removed = set(starved)
         survivors = [c for c in range(lists) if c not in removed]
 
-        cents = np.array([r["vec"] for r in cent_rows], dtype=np.float64)
         geo = cents
         if spherical:
             geo = cents / np.maximum(
@@ -2566,8 +2487,11 @@ class VechordRegistry:
         """Delete sweep: drop index rows whose primary key no longer
         exists in the table. DELETE rewrites the TABLE only
         (:meth:`remove_by`), so the clustered IVF copy keeps serving
-        deleted rows until a rebuild — this is the targeted fix: one
-        pk semi-join against the current snapshot (honest O(index)
+        deleted rows to probe search until this sweep runs —
+        :meth:`maintain` runs it (step 2) whenever the layout holds
+        more rows than the table, together with the postings twin that
+        sweeps the BM25 and sparse layouts (:meth:`_prune_postings`).
+        One pk semi-join against the current snapshot (honest O(index)
         cost, the price of any delete sweep), then ONLY the cells that
         lost rows rewrite; untouched partitions hardlink. Cells left
         empty keep their centroid (probe search returns nothing from
@@ -2576,36 +2500,19 @@ class VechordRegistry:
         ``{"pruned_rows", "rewritten_cells", "lists"}``; the table
         file ledger is untouched (prune never un-covers a live row —
         the next extend re-adopts as usual)."""
-        spec = self._spec(name)
-        if spec.vector_column is None:
-            raise SchemaError(f"table {name} has no vector column")
-        pk = spec.primary_key
+        _, ipath = self._open_layout(name, "ivf")
+        pk = self._spec(name).primary_key
         if pk is None:
             raise SchemaError("prune_vector_index needs a primary key")
-        ipath = self._index_path(name)
-        self._recover_recluster(ipath)
-        if not (ipath / "data").exists():
-            raise SchemaError(
-                f"no IVF index for {name}; call build_vector_index first"
-            )
         with self._maintenance_lock(ipath):
             return self._prune_cells_locked(ipath, pk.name, self.load(name))
 
     def prune_multivec_index(self, name: str) -> dict[str, int]:
         """The multivector twin of :meth:`prune_vector_index`."""
-        spec = self._spec(name)
-        if spec.multivec_column is None:
-            raise SchemaError(f"table {name} has no multivector column")
-        pk = spec.primary_key
+        _, ipath = self._open_layout(name, "mvivf")
+        pk = self._spec(name).primary_key
         if pk is None:
             raise SchemaError("prune_multivec_index needs a primary key")
-        ipath = self._mv_index_path(name)
-        self._recover_recluster(ipath)
-        if not (ipath / "data").exists():
-            raise SchemaError(
-                f"no multivector IVF index for {name}; "
-                "call build_multivec_index first"
-            )
         with self._maintenance_lock(ipath):
             return self._prune_cells_locked(ipath, pk.name, self.load(name))
 
@@ -2614,58 +2521,99 @@ class VechordRegistry:
     ) -> dict[str, int]:
         data = self.spark.read.parquet(str(ipath / "data"))
         kept = data.join(table.select(pk_name), pk_name, "left_semi")
-        before = {
-            r["centroid_id"]: r["n"]
-            for r in data.groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        after = {
-            r["centroid_id"]: r["n"]
-            for r in kept.groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        lists = self.spark.read.parquet(str(ipath / "centroids")).count()
-        affected = {
-            c for c, n in before.items() if after.get(c, 0) != n
-        }
+        before = self._cell_counts(data)
+        after = self._cell_counts(kept)
+        cents = self._read_centroids(ipath / "centroids")
+        affected = {c for c, n in before.items() if after.get(c, 0) != n}
         pruned = sum(before.values()) - sum(after.values())
-        if not affected:
-            return {
-                "pruned_rows": 0,
-                "rewritten_cells": 0,
-                "lists": int(lists),
-            }
-        cent_rows = (
-            self.spark.read.parquet(str(ipath / "centroids"))
-            .orderBy("centroid_id")
-            .collect()
-        )
-        new_cents = [(r["centroid_id"], list(r["vec"])) for r in cent_rows]
-        reassigned = kept.filter(
-            F.col("centroid_id").isin([int(c) for c in affected])
-        )
-        self._swap_cells_layout(
-            ipath, new_cents, reassigned=reassigned, exclude=affected
-        )
+        if affected:
+            reassigned = kept.filter(
+                F.col("centroid_id").isin([int(c) for c in affected])
+            )
+            self._swap_cells_layout(
+                ipath,
+                list(enumerate(cents)),
+                reassigned=reassigned,
+                exclude=affected,
+            )
         return {
             "pruned_rows": int(pruned),
             "rewritten_cells": len(affected),
-            "lists": int(lists),
+            "lists": len(cents),
         }
+
+    def _prune_postings(self, name: str, kind: str) -> dict[str, int]:
+        """The delete sweep of the flat postings layouts (``bm25``,
+        ``sparse``) — the twin of :meth:`prune_vector_index`: drop
+        every postings (and BM25 doclen) row whose doc id the table no
+        longer holds, so deleted docs stop ranking and, for BM25, stop
+        counting in n_docs, avgdl and df. One pk join measures the
+        ghost docs (and records the sparse layout's live doc count,
+        :meth:`_set_sparse_docs`); with none the rows are untouched.
+        Otherwise each row directory rewrites through the swap journal
+        (:meth:`_swap_index_dir`) and BM25's docfreq/stats re-derive
+        from the surviving postings (:meth:`_rebuild_keyword_derived`)
+        — the tables a fresh build over the live rows writes. The
+        ``extend.intent`` marker brackets the rewrite, so a crash
+        before the derived tables land makes the next extend rebuild
+        them. Holds the maintenance lock. Returns ``{"pruned_rows"}``
+        (ghost docs dropped)."""
+        pk = self._spec(name).primary_key
+        if pk is None:
+            raise SchemaError(f"pruning {kind} of {name} needs a primary key")
+        ipath = self._layout_path(name, kind)
+        id_col = "doc_id" if kind == "bm25" else pk.name
+        live = self.load(name).select(F.col(pk.name).alias(id_col))
+        with self._maintenance_lock(ipath):
+            # BM25 keeps one doclen row per doc; sparse only postings
+            ids = ipath / ("doclen" if kind == "bm25" else "postings")
+            n = (
+                self.spark.read.parquet(str(ids))
+                .select(id_col)
+                .distinct()
+                .join(live.withColumn("__live", F.lit(1)), id_col, "left")
+                .agg(
+                    F.count(F.lit(1)).alias("docs"),
+                    F.count("__live").alias("live"),
+                )
+                .first()
+            )
+            ghosts = n["docs"] - n["live"]
+            if ghosts:
+                marked = not (ipath / "extend.intent").exists()
+                self._mark_extend_intent(ipath)
+                for d in self._LAYOUT_DIRS[kind]:
+                    self._swap_index_dir(
+                        ipath / d,
+                        kind,
+                        keep=lambda df: df.join(live, id_col, "left_semi"),
+                    )
+                if kind == "bm25":
+                    self._rebuild_keyword_derived(ipath)
+                if marked:
+                    (ipath / "extend.intent").unlink(missing_ok=True)
+            if kind == "sparse":
+                self._set_sparse_docs(ipath, n["live"])
+        return {"pruned_rows": int(ghosts)}
 
     def index_stats(self, name: str) -> dict:
         """Observability for every persisted index layout of ``name``
-        — the numbers the maintenance decisions key on, one call:
+        (:meth:`_layouts`, so a layout caught mid compact_index swap
+        is repaired and reported) — the numbers the maintenance
+        decisions key on, one call:
 
-        - per layout (``ivf`` / ``mvivf`` / ``bm25``): parquet file
-          count + bytes (small-file pressure — feed
+        - per layout (``ivf`` / ``mvivf`` / ``bm25`` / ``sparse``):
+          parquet file count + bytes (small-file pressure — feed
           :meth:`compact_index` when files pile up);
         - IVF layouts additionally: ``lists``, ``rows``, per-cell
           min/mean/max and ``skew`` (max/mean — the ratio
           :meth:`recluster_vector_index`'s ``max_cell_factor``
           thresholds), plus ``pq``/``opq``/``spherical`` flags;
+        - ``bm25`` / ``sparse`` additionally: ``rows``, the indexed
+          doc count (BM25: ``n_docs`` of its stats table; sparse: its
+          recorded count, ``None`` when unknown — see
+          :meth:`_set_sparse_docs`). More than the table holds means
+          deleted docs still rank;
         - ``ledger_fresh``: whether files.json still proves
           append-only history against the CURRENT table files (False
           after a compact/DELETE → the next extend pays the anti-join
@@ -2674,8 +2622,8 @@ class VechordRegistry:
           extended (0 = coverage current; >0 = run extend_*).
 
         Driver-side file listing plus one small groupBy per IVF
-        layout; no table scan. Returns a plain dict, absent layouts
-        omitted."""
+        layout and a one-row read for BM25; no table scan. Returns a
+        plain dict, unbuilt layouts omitted."""
         import json
 
         self._spec(name)
@@ -2689,34 +2637,29 @@ class VechordRegistry:
             files = [p for p in d.rglob("*.parquet") if p.is_file()]
             return len(files), sum(p.stat().st_size for p in files)
 
-        def _ledger_state(ipath: Path) -> tuple[bool, int]:
-            """(fresh, files_behind): fresh = the file-diff fast path
-            is usable; files_behind = appended files not yet covered."""
+        def _ledger_state(ipath: Path) -> dict:
+            """ledger_fresh = the file-diff fast path is usable;
+            files_behind = appended files not yet covered."""
             ledger = ipath / "files.json"
-            if not ledger.exists() or (ipath / "extend.intent").exists():
-                return False, len(cur_files)
-            try:
-                seen = set(json.loads(ledger.read_text()))
-            except ValueError:
-                return False, len(cur_files)
-            if not seen <= cur_files:
-                return False, len(cur_files - seen)
-            return True, len(cur_files - seen)
+            seen = None
+            if ledger.exists() and not (ipath / "extend.intent").exists():
+                try:
+                    seen = set(json.loads(ledger.read_text()))
+                except ValueError:
+                    pass
+            fresh = seen is not None and seen <= cur_files
+            behind = len(cur_files - seen) if seen is not None else len(cur_files)
+            return {"ledger_fresh": fresh, "files_behind": behind}
 
-        for key, ipath in (
-            ("ivf", self._index_path(name)),
-            ("mvivf", self._mv_index_path(name)),
-        ):
-            if not (ipath / "data").exists():
+        layouts = self._layouts(name)
+        for key in ("ivf", "mvivf"):
+            ipath = layouts.get(key)
+            if ipath is None or not (ipath / "data").exists():
                 continue
             n_files, n_bytes = _dir_stats(ipath / "data")
-            cells = [
-                r["n"]
-                for r in self.spark.read.parquet(str(ipath / "data"))
-                .groupBy("centroid_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            ]
+            cells = list(
+                self._cell_counts(self.spark.read.parquet(str(ipath / "data"))).values()
+            )
             rows = sum(cells)
             lists = (
                 self.spark.read.parquet(str(ipath / "centroids")).count()
@@ -2743,29 +2686,23 @@ class VechordRegistry:
                 "residual": bool(meta.get("residual")),
                 "rabitq": bool(meta.get("rabitq")),
                 "spherical": bool(meta.get("spherical")),
+                **_ledger_state(ipath),
             }
-            fresh, behind = _ledger_state(ipath)
-            out[key]["ledger_fresh"] = fresh
-            out[key]["files_behind"] = behind
-        kpath = self.base_path / f"{self.namespace}_{name}.bm25"
-        if (kpath / "postings").exists():
-            n_files, n_bytes = _dir_stats(kpath)
-            fresh, behind = _ledger_state(kpath)
-            out["bm25"] = {
+        for key in ("bm25", "sparse"):
+            ipath = layouts.get(key)
+            if ipath is None or not (ipath / "postings").exists():
+                continue
+            if key == "bm25":
+                row = self.spark.read.parquet(str(ipath / "stats")).first()
+                rows = int(row["n_docs"]) if row else 0
+            else:
+                rows = self._vector_index_meta(ipath).get("docs")
+            n_files, n_bytes = _dir_stats(ipath)
+            out[key] = {
                 "files": n_files,
                 "bytes": n_bytes,
-                "ledger_fresh": fresh,
-                "files_behind": behind,
-            }
-        spath = self._sparse_index_path(name)
-        if (spath / "postings").exists():
-            n_files, n_bytes = _dir_stats(spath)
-            fresh, behind = _ledger_state(spath)
-            out["sparse"] = {
-                "files": n_files,
-                "bytes": n_bytes,
-                "ledger_fresh": fresh,
-                "files_behind": behind,
+                "rows": rows,
+                **_ledger_state(ipath),
             }
         return out
 
@@ -2794,10 +2731,15 @@ class VechordRegistry:
            the next extend pays the pk anti-join once and re-adopts,
            restoring O(appended-data) extends — the example's closing
            step after a table compact).
-        2. **prune** — an IVF/multivec layout holding MORE rows than
-           the table (deletes never rewrite the clustered copy): one
-           pk semi-join sweep drops the ghosts, rewriting only the
-           cells that lost rows.
+        2. **prune** — deletes rewrite the table, never a layout, so
+           a layout holding MORE docs (``rows``) than the table (for
+           sparse: than its non-empty sparse cells, counted in the
+           same table pass) sweeps the rows whose primary key the
+           table no longer holds: rewriting only the IVF cells that
+           lost rows, or the postings (BM25: and doclen, with
+           docfreq/stats re-derived). A sparse layout whose count is
+           unknown (an extend went through the pk anti-join) sweeps
+           too, and the sweep records the count.
         3. **recluster** — IVF/multivec layouts whose ``skew``
            exceeds ``max_cell_factor``: targeted recluster waves (one
            split pass per call) until the layout converges or
@@ -2809,8 +2751,8 @@ class VechordRegistry:
         5. **compact_index** — small-file hygiene when fragmentation
            is measured: an IVF layout averaging more than
            ``compact_files_per_cell`` files per cell (each extend
-           appends one file set per touched partition), or a BM25
-           layout over ``compact_bm25_files`` files.
+           appends one file set per touched partition), or a BM25 or
+           sparse layout over ``compact_bm25_files`` files.
 
         Each primitive takes the per-layout maintenance lock itself;
         this method holds NO outer lock, so a concurrent maintainer
@@ -2823,13 +2765,7 @@ class VechordRegistry:
         stats = before
 
         # 1. coverage: bring every stale/behind layout current
-        extenders = {
-            "ivf": self.extend_vector_index,
-            "mvivf": self.extend_multivec_index,
-            "bm25": self.extend_keyword_index,
-            "sparse": self.extend_sparse_index,
-        }
-        for key, fn in extenders.items():
+        for key, fn in self._extenders().items():
             st = stats.get(key)
             if st is None:
                 continue
@@ -2840,17 +2776,32 @@ class VechordRegistry:
         if actions:
             stats = self.index_stats(name)
 
-        # 2. ghosts: a layout larger than its table has deleted rows
+        # 2. ghosts: rows the table deleted that a layout still holds
         pruners = {
             "ivf": self.prune_vector_index,
             "mvivf": self.prune_multivec_index,
+            "bm25": lambda n: self._prune_postings(n, "bm25"),
+            "sparse": lambda n: self._prune_postings(n, "sparse"),
         }
         if any(k in stats for k in pruners):
-            table_rows = self.load(name).count()
+            counts = [F.count(F.lit(1)).alias("rows")]
+            if "sparse" in stats:
+                sv = self._spec(name).sparse_column.name
+                counts.append(self._nonempty_sparse(sv).alias("sparse"))
+            held = self.load(name).agg(*counts).first()
+            pruned = False
             for key, fn in pruners.items():
-                if key in stats and stats[key]["rows"] > table_rows:
-                    actions.append({"op": "prune", "index": key, **fn(name)})
-            if actions and actions[-1]["op"] == "prune":
+                st = stats.get(key)
+                if st is None or (
+                    st["rows"] is not None
+                    and st["rows"] <= held["sparse" if key == "sparse" else "rows"]
+                ):
+                    continue
+                rep = fn(name)
+                if rep["pruned_rows"]:
+                    actions.append({"op": "prune", "index": key, **rep})
+                    pruned = True
+            if pruned:
                 stats = self.index_stats(name)
 
         # 3. shape: split drifted cells until the skew gate holds
@@ -2979,37 +2930,19 @@ class VechordRegistry:
             return self._extend_multivec_index_locked(name)
 
     def _extend_multivec_index_locked(self, name: str) -> int:
-        import numpy as np
-
         from vechord_spark.operators.ivf import (
             assign_centroids,
             token_centroid_ids,
         )
         from vechord_spark.operators.maxsim import mean_vector
 
-        spec = self._spec(name)
-        mv_col = spec.multivec_column
-        if mv_col is None:
-            raise SchemaError(f"table {name} has no multivector column")
-        pk = spec.primary_key
-        if pk is None:
-            raise SchemaError("extend_multivec_index needs a primary key")
-        ipath = self._mv_index_path(name)
-        self._recover_index_swap(ipath / "data")
         # caller (extend_multivec_index) holds the maintenance lock —
         # recover in-lock (see _recover_recluster docstring)
-        self._recover_recluster(ipath, locked=True)
-        if not (ipath / "data").exists():
-            raise SchemaError(
-                f"no multivector IVF index for {name}; "
-                "call build_multivec_index first"
-            )
-        rows = (
-            self.spark.read.parquet(str(ipath / "centroids"))
-            .orderBy("centroid_id")
-            .collect()
-        )
-        centroids = np.array([r.vec for r in rows])
+        mv_col, ipath = self._open_layout(name, "mvivf", locked=True)
+        pk = self._spec(name).primary_key
+        if pk is None:
+            raise SchemaError("extend_multivec_index needs a primary key")
+        centroids = self._read_centroids(ipath / "centroids")
         new, covered = self._new_rows_since_index(name, ipath)
         if new is None:
             base = self.load(name)
@@ -3026,12 +2959,7 @@ class VechordRegistry:
             centroids,
         )
         if (ipath / "token_centroids").exists():
-            trows = (
-                self.spark.read.parquet(str(ipath / "token_centroids"))
-                .orderBy("centroid_id")
-                .collect()
-            )
-            tok = np.array([r.vec for r in trows])
+            tok = self._read_centroids(ipath / "token_centroids")
             fresh = fresh.withColumn(
                 "__centroid_ids", token_centroid_ids(mv_col.name, tok)
             )
@@ -3041,9 +2969,6 @@ class VechordRegistry:
         )
         self._record_index_files(name, ipath, files=covered)
         return n_new
-
-    def _mv_index_path(self, name: str) -> Path:
-        return self.base_path / f"{self.namespace}_{name}.mvivf"
 
     def build_multivec_index(
         self,
@@ -3078,78 +3003,44 @@ class VechordRegistry:
         if ipath.exists():
             shutil.rmtree(ipath)
         index.write_clustered(str(ipath / "data"))
-        cents = self.spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(index.inner.centroids)],
-            "centroid_id int, vec array<double>",
+        self._write_centroids(
+            ipath / "centroids", enumerate(index.inner.centroids)
         )
-        cents.write.parquet(str(ipath / "centroids"))
         if index.token_centroids is not None:
-            tok = self.spark.createDataFrame(
-                [
-                    (i, [float(x) for x in c])
-                    for i, c in enumerate(index.token_centroids)
-                ],
-                "centroid_id int, vec array<double>",
+            self._write_centroids(
+                ipath / "token_centroids", enumerate(index.token_centroids)
             )
-            tok.write.parquet(str(ipath / "token_centroids"))
         self._record_index_files(name, ipath, files=scanned_files)
         return n_lists
 
     def _load_multivec_index(self, name: str):
-        import numpy as np
-
         from vechord_spark.operators.ivf import IvfIndex, MultiVecIvfIndex
 
-        ipath = self._mv_index_path(name)
-        self._recover_index_swap(ipath / "data")
-        self._recover_recluster(ipath)
-        if not (ipath / "data").exists():
-            return None
-        spec = self._spec(name)
-        rows = (
-            self.spark.read.parquet(str(ipath / "centroids"))
-            .orderBy("centroid_id")
-            .collect()
-        )
-        centroids = np.array([r.vec for r in rows])
-        assigned = self.spark.read.parquet(str(ipath / "data"))
+        mv_col, ipath = self._open_layout(name, "mvivf")
         token_centroids = None
         if (ipath / "token_centroids").exists():
-            trows = (
-                self.spark.read.parquet(str(ipath / "token_centroids"))
-                .orderBy("centroid_id")
-                .collect()
-            )
-            token_centroids = np.array([r.vec for r in trows])
+            token_centroids = self._read_centroids(ipath / "token_centroids")
         return MultiVecIvfIndex(
-            IvfIndex(centroids, assigned, "__mean"),
-            spec.multivec_column.name,
+            IvfIndex(
+                self._read_centroids(ipath / "centroids"),
+                self.spark.read.parquet(str(ipath / "data")),
+                "__mean",
+            ),
+            mv_col.name,
             token_centroids=token_centroids,
         )
 
     def _load_vector_index(self, name: str):
         from vechord_spark.operators.ivf import IvfIndex
 
-        import numpy as np
-
-        ipath = self._index_path(name)
-        self._recover_index_swap(ipath / "data")
-        self._recover_recluster(ipath)
-        if not (ipath / "data").exists():
-            return None
-        spec = self._spec(name)
-        rows = (
-            self.spark.read.parquet(str(ipath / "centroids"))
-            .orderBy("centroid_id")
-            .collect()
-        )
-        centroids = np.array([r.vec for r in rows])
+        vec_col, ipath = self._open_layout(name, "ivf")
+        meta = self._vector_index_meta(ipath)
         assigned = self.spark.read.parquet(str(ipath / "data"))
         ivf = IvfIndex(
-            centroids,
+            self._read_centroids(ipath / "centroids"),
             assigned,
-            spec.vector_column.name,
-            spherical=bool(self._vector_index_meta(ipath).get("spherical")),
+            vec_col.name,
+            spherical=bool(meta.get("spherical")),
         )
         book = self._load_codebooks(ipath)
         if book is not None:
@@ -3157,10 +3048,7 @@ class VechordRegistry:
 
             # the persisted layout already carries __pq — no re-encode
             return IvfPqIndex(
-                ivf,
-                book,
-                encoded=assigned,
-                residual=bool(self._vector_index_meta(ipath).get("residual")),
+                ivf, book, encoded=assigned, residual=bool(meta.get("residual"))
             )
         rq = self._load_rabitq_rotation(ipath)
         if rq is not None:
@@ -3170,13 +3058,21 @@ class VechordRegistry:
             return RabitqIndex(ivf, rq, encoded=assigned)
         return ivf
 
-    def _filter_quantized_index(self, name: str, index, conditions):
-        """PRE-filter a quantized layout (PQ/OPQ/residual/RaBitQ): the
-        clustered copy stores codes as per-row columns, so one filter
-        on the encoded frame restricts BOTH phases — the estimate scans
-        only matching rows' codes and the exact refine reranks only
-        matchers. ALTER-added columns are refused like on the plain
-        path (the layout copy may predate the ALTER or a backfill)."""
+    def _filtered_layout(self, name: str, index, conditions):
+        """PRE-filter a loaded probe layout (plain IVF, PQ/OPQ/residual,
+        RaBitQ or multivector) by ``conditions``. Codes and correction
+        scalars are per-row columns of the clustered copy, so one
+        filter on the stored frame restricts every phase: the probe or
+        estimate scan ranks only matching rows and the exact refine
+        reranks only matchers — top-k MATCHING rows, with the same
+        probes-vs-selectivity recall trade as pgvector's filtered
+        scan. Conditions on ALTER-added columns are refused: the
+        layout's denormalized copy may predate the ALTER (column
+        missing) or a backfill (stale values), so filtering it would
+        silently drop or mismatch rows; the brute-force path reads the
+        table and is always current."""
+        if not conditions:
+            return index
         evolved_cond = set(conditions) & self._evolved_columns(name)
         if evolved_cond:
             raise SchemaError(
@@ -3185,18 +3081,36 @@ class VechordRegistry:
                 "index path (the clustered copy snapshots rows at "
                 "build time); use the brute-force path (probes=None)"
             )
+        from vechord_spark.operators.ivf import IvfIndex, MultiVecIvfIndex
         from vechord_spark.operators.pq import IvfPqIndex
         from vechord_spark.operators.rabitq import RabitqIndex
 
-        filtered = index.encoded.filter(
-            build_predicate(index.encoded, conditions)
-        )
+        def where(df: DataFrame) -> DataFrame:
+            return df.filter(build_predicate(df, conditions))
+
+        if isinstance(index, MultiVecIvfIndex):
+            return MultiVecIvfIndex(
+                self._filtered_layout(name, index.inner, conditions),
+                index.mv_col,
+                token_centroids=index.token_centroids,
+            )
         if isinstance(index, IvfPqIndex):
             return IvfPqIndex(
-                index.ivf, index.book, encoded=filtered,
+                index.ivf,
+                index.book,
+                encoded=where(index.encoded),
                 residual=index.residual,
             )
-        return RabitqIndex(index.ivf, index.rot, encoded=filtered)
+        if isinstance(index, RabitqIndex):
+            return RabitqIndex(index.ivf, index.rot, encoded=where(index.encoded))
+        # keep the probe geometry: a spherical index must normalize the
+        # query on the filtered path too
+        return IvfIndex(
+            index.centroids,
+            where(index.assigned),
+            index.vec_col,
+            spherical=index.spherical,
+        )
 
     def _quantized_two_scan(
         self, index, qv, topk, probes, refine, dist, layout_fields, pk_name
@@ -3278,7 +3192,6 @@ class VechordRegistry:
         pruning — a highly selective predicate can make low ``probes``
         under-recall, exactly pgvector's filtered-iterative-scan trade).
         """
-        from vechord_spark.operators.ivf import IvfIndex
         from vechord_spark.operators.knn import knn
 
         from vechord_spark.errors import DimensionMismatch
@@ -3299,27 +3212,13 @@ class VechordRegistry:
             layout_fields, evolved, forced_pk = self._plan_evolved_fields(
                 name, fields, pk
             )
-            index = self._load_vector_index(name)
-            if index is None:
-                raise SchemaError(
-                    f"no IVF index for {name}; call build_vector_index first"
-                )
+            index = self._filtered_layout(
+                name, self._load_vector_index(name), conditions
+            )
             from vechord_spark.operators.pq import IvfPqIndex
             from vechord_spark.operators.rabitq import RabitqIndex
 
             if isinstance(index, (IvfPqIndex, RabitqIndex)):
-                if conditions:
-                    # PRE-filter on the quantized path: codes and
-                    # correction scalars are per-ROW columns of the
-                    # clustered copy, so filtering the encoded frame
-                    # before the estimate keeps both phases correct —
-                    # the estimate ranks only matching rows and the
-                    # exact refine fixes their order. Same exactly-k-
-                    # true-matches semantics as the plain index path
-                    # (and the same probes-vs-selectivity recall trade)
-                    index = self._filter_quantized_index(
-                        name, index, conditions
-                    )
                 qv = list(vector)
                 rot = self._load_opq_rotation(self._index_path(name))
                 if rot is not None:
@@ -3353,43 +3252,15 @@ class VechordRegistry:
                         select=layout_fields,
                         tie_break=None,
                     )
-                if evolved:
-                    out = self._serve_evolved_fields(
-                        name, out, fields, evolved, forced_pk
-                    )
-                return out
-            if conditions:
-                evolved_cond = set(conditions) & self._evolved_columns(name)
-                if evolved_cond:
-                    # the layout's denormalized copy may predate the
-                    # ALTER (column missing) or a backfill (stale
-                    # values) — filtering on it would silently drop or
-                    # mismatch rows; the brute-force path reads the
-                    # table and is always current
-                    raise SchemaError(
-                        f"conditions on ALTER-added columns "
-                        f"{sorted(evolved_cond)} are not supported on the "
-                        "index path (the clustered copy snapshots rows at "
-                        "build time); use the brute-force path (probes=None)"
-                    )
-                index = IvfIndex(
-                    index.centroids,
-                    index.assigned.filter(
-                        build_predicate(index.assigned, conditions)
-                    ),
-                    index.vec_col,
-                    # keep the probe geometry: a spherical index must
-                    # normalize the query on the filtered path too
-                    spherical=index.spherical,
+            else:
+                out = index.search(
+                    list(vector),
+                    k=topk,
+                    probes=probes,
+                    distance=dist,
+                    select=layout_fields,
+                    tie_break=pk.name if pk else None,
                 )
-            out = index.search(
-                list(vector),
-                k=topk,
-                probes=probes,
-                distance=dist,
-                select=layout_fields,
-                tie_break=pk.name if pk else None,
-            )
             if evolved:
                 out = self._serve_evolved_fields(
                     name, out, fields, evolved, forced_pk
@@ -3454,11 +3325,11 @@ class VechordRegistry:
         fields = list(return_fields) if return_fields else spec.non_vec_columns()
         pk = spec.primary_key
         if probes is not None:
-            index = self._load_vector_index(name)
-            if index is None:
-                raise SchemaError(
-                    f"no IVF index for {name}; call build_vector_index first"
-                )
+            # one shared PRE-filter for the whole batch, same contract
+            # as the single path
+            index = self._filtered_layout(
+                name, self._load_vector_index(name), conditions
+            )
             from vechord_spark.operators.pq import IvfPqIndex
             from vechord_spark.operators.rabitq import RabitqIndex
 
@@ -3468,12 +3339,6 @@ class VechordRegistry:
             qs = [list(v) for v in vectors]
             extra = {}
             if isinstance(index, (IvfPqIndex, RabitqIndex)):
-                if conditions:
-                    # one shared PRE-filter for the whole batch, same
-                    # contract as the single quantized path
-                    index = self._filter_quantized_index(
-                        name, index, conditions
-                    )
                 # PQ layout: the batched estimate -> refine -> exact
                 # two-phase (IvfPqIndex.search_batch); OPQ stores the
                 # clustered copy rotated, so the whole query batch
@@ -3482,25 +3347,6 @@ class VechordRegistry:
                 if rot is not None:
                     qs = [[float(x) for x in rot.apply(q)] for q in qs]
                 extra = {"refine": refine}
-            elif conditions:
-                evolved_cond = set(conditions) & self._evolved_columns(name)
-                if evolved_cond:
-                    raise SchemaError(
-                        f"conditions on ALTER-added columns "
-                        f"{sorted(evolved_cond)} are not supported on the "
-                        "index path (the clustered copy snapshots rows at "
-                        "build time); use the brute-force path (probes=None)"
-                    )
-                from vechord_spark.operators.ivf import IvfIndex
-
-                index = IvfIndex(
-                    index.centroids,
-                    index.assigned.filter(
-                        build_predicate(index.assigned, conditions)
-                    ),
-                    index.vec_col,
-                    spherical=index.spherical,
-                )
             out = index.search_batch(
                 qs,
                 k=topk,
@@ -3595,13 +3441,9 @@ class VechordRegistry:
         fields = list(return_fields) if return_fields else spec.non_vec_columns()
         pk = spec.primary_key
         if probes is not None:
-            index = self._load_multivec_index(name)
-            if index is None:
-                raise SchemaError(
-                    f"no multivector IVF index for {name}; "
-                    "call build_multivec_index first"
-                )
-            index = self._filtered_multivec_index(name, index, conditions)
+            index = self._filtered_layout(
+                name, self._load_multivec_index(name), conditions
+            )
             layout_fields, evolved, forced_pk = self._plan_evolved_fields(
                 name, fields, pk
             )
@@ -3638,30 +3480,6 @@ class VechordRegistry:
             k=topk,
             select=fields,
             tie_break=pk.name if pk else None,
-        )
-
-    def _filtered_multivec_index(self, name: str, index, conditions):
-        """Apply a PRE-filter to the persisted multivec layout — same
-        contract and evolved-column refusal as the vector path."""
-        if not conditions:
-            return index
-        evolved_cond = set(conditions) & self._evolved_columns(name)
-        if evolved_cond:
-            raise SchemaError(
-                f"conditions on ALTER-added columns {sorted(evolved_cond)} "
-                "are not supported on the index path (the clustered copy "
-                "snapshots rows at build time); use the brute-force path "
-                "(probes=None)"
-            )
-        from vechord_spark.operators.ivf import IvfIndex, MultiVecIvfIndex
-
-        filtered = index.inner.assigned.filter(
-            build_predicate(index.inner.assigned, conditions)
-        )
-        return MultiVecIvfIndex(
-            IvfIndex(index.inner.centroids, filtered, index.inner.vec_col),
-            index.mv_col,
-            token_centroids=index.token_centroids,
         )
 
     def search_by_multivec_batch(
@@ -3704,13 +3522,9 @@ class VechordRegistry:
         pk = spec.primary_key
         qs = [[list(v) for v in q] for q in queries]
         if probes is not None:
-            index = self._load_multivec_index(name)
-            if index is None:
-                raise SchemaError(
-                    f"no multivector IVF index for {name}; "
-                    "call build_multivec_index first"
-                )
-            index = self._filtered_multivec_index(name, index, conditions)
+            index = self._filtered_layout(
+                name, self._load_multivec_index(name), conditions
+            )
             layout_fields, evolved, forced_pk = self._plan_evolved_fields(
                 name, fields, pk
             )
@@ -3774,7 +3588,7 @@ class VechordRegistry:
         # file set of the EXACT df the postings were tokenized from
         scanned_files = sorted(df.inputFiles())
         index = Bm25Index(df, pk.name, kw_col.name, tokenizer=tokenizer)
-        ipath = self.base_path / f"{self.namespace}_{name}.bm25"
+        ipath = self._layout_path(name, "bm25")
         if ipath.exists():
             shutil.rmtree(ipath)
         # persist for the build: all four persisted tables derive from
@@ -3869,7 +3683,7 @@ class VechordRegistry:
 
         Holds the maintenance lock like :meth:`extend_vector_index`.
         """
-        ipath = self.base_path / f"{self.namespace}_{name}.bm25"
+        ipath = self._layout_path(name, "bm25")
         with self._maintenance_lock(ipath):
             return self._extend_keyword_index_locked(name)
 
@@ -3883,12 +3697,12 @@ class VechordRegistry:
         pk = spec.primary_key
         if pk is None:
             raise SchemaError(f"table {name} needs a primary key for BM25")
-        old = self._load_keyword_index(name)
+        old = self._load_keyword_index(name, locked=True)
         if old is None:
             raise SchemaError(
                 f"no BM25 index for {name}; call build_keyword_index first"
             )
-        ipath = self.base_path / f"{self.namespace}_{name}.bm25"
+        ipath = self._layout_path(name, "bm25")
         # a present intent marker means a previous extend may have
         # appended postings without landing the derived tables — the
         # derived tables must be rebuilt from postings this run
@@ -3964,30 +3778,29 @@ class VechordRegistry:
         self._record_index_files(name, ipath, files=covered)
         return n_new
 
-    def _load_keyword_index(self, name: str):
+    def _load_keyword_index(self, name: str, *, locked: bool = False):
+        """The persisted BM25 index of ``name`` (postings, doclen,
+        docfreq, stats and the tokenizer it was built with), or None
+        when none was built — the keyword search then falls back to
+        the one-shot plan. ``locked``: the caller holds the layout's
+        maintenance lock (see :meth:`_recover_index_swap`)."""
         import json
 
         from vechord_spark.operators.bm25 import Bm25Index
 
-        ipath = self.base_path / f"{self.namespace}_{name}.bm25"
-        self._recover_index_swap(ipath / "postings")
-        self._recover_index_swap(ipath / "doclen")
+        ipath = self._layout_path(name, "bm25")
+        self._recover_index_swap(ipath, "bm25", locked=locked)
         if not (ipath / "postings").exists():
             return None
         spec = self._spec(name)
-        kw_idx = spec.keyword_column.index
-        idx = Bm25Index.__new__(Bm25Index)
-        idx.doc_id = spec.primary_key.name
-        idx.k1 = kw_idx.k1
-        idx.b = kw_idx.b
-        idx.tokenizer = None  # engine tokenizer unless meta says otherwise
+        tokenizer = None  # engine tokenizer unless meta says otherwise
         meta_path = ipath / "meta.json"
         if meta_path.exists():
             meta = json.loads(meta_path.read_text())
             if meta.get("tokenizer") == "wordpiece":
                 from vechord_spark.functions.wordpiece import WordPieceTokenizer
 
-                idx.tokenizer = WordPieceTokenizer.from_vocab_file(
+                tokenizer = WordPieceTokenizer.from_vocab_file(
                     str(ipath / "vocab.txt"),
                     unk_token=meta["unk_token"],
                     lowercase=meta["lowercase"],
@@ -3996,19 +3809,20 @@ class VechordRegistry:
             elif meta.get("tokenizer") == "unigram":
                 from vechord_spark.functions.unigram import UnigramTokenizer
 
-                idx.tokenizer = UnigramTokenizer.load(
-                    str(ipath / "unigram.json")
-                )
-        idx.postings = self.spark.read.parquet(str(ipath / "postings"))
-        idx.doclen = self.spark.read.parquet(str(ipath / "doclen"))
-        idx.docfreq = self.spark.read.parquet(str(ipath / "docfreq"))
-        idx.stats = self.spark.read.parquet(str(ipath / "stats"))
-        return idx
+                tokenizer = UnigramTokenizer.load(str(ipath / "unigram.json"))
+        kw_idx = spec.keyword_column.index
+        return Bm25Index.from_frames(
+            *(
+                self.spark.read.parquet(str(ipath / t))
+                for t in ("postings", "doclen", "docfreq", "stats")
+            ),
+            doc_id=spec.primary_key.name,
+            k1=kw_idx.k1,
+            b=kw_idx.b,
+            tokenizer=tokenizer,
+        )
 
     # ------------------------------------------------------ sparse vectors
-    def _sparse_index_path(self, name: str) -> Path:
-        return self.base_path / f"{self.namespace}_{name}.sparse"
-
     def build_sparse_index(self, name: str) -> int:
         """Build + persist the inverted-postings layout for the
         table's :class:`SparseVector` column — CREATE INDEX for sparse
@@ -4037,9 +3851,35 @@ class VechordRegistry:
         posts.repartitionByRange(8, F.col("idx")).sortWithinPartitions(
             "idx"
         ).write.parquet(str(ipath / "postings"))
-        n = self.spark.read.parquet(str(ipath / "postings")).count()
+        n = (
+            self.spark.read.parquet(str(ipath / "postings"))
+            .agg(F.count(F.lit(1)).alias("n"), F.countDistinct(pk.name).alias("docs"))
+            .first()
+        )
+        self._set_sparse_docs(ipath, int(n["docs"]))
         self._record_index_files(name, ipath, files=scanned_files)
-        return int(n)
+        return int(n["n"])
+
+    def _set_sparse_docs(self, ipath: Path, docs: int | None) -> None:
+        """Persist the sparse layout's indexed-doc count (``meta.json``
+        ``docs``; ``index_stats()['sparse']['rows']``), the signal
+        :meth:`maintain` compares with the table's non-empty sparse
+        cells to decide whether the ghost sweep runs. ``None`` marks
+        it unknown (an extend through the pk anti-join cannot tell
+        indexed ghosts from live docs); the next sweep records it."""
+        import json
+
+        meta = ipath / "meta.json"
+        if docs is None:
+            meta.unlink(missing_ok=True)
+        else:
+            meta.write_text(json.dumps({"docs": int(docs)}))
+
+    @staticmethod
+    def _nonempty_sparse(sv_col: str):
+        """Counts the rows whose sparse cell enters the postings (NULL
+        and empty cells contribute none)."""
+        return F.count(F.when(F.size(F.col(f"{sv_col}.indices")) > 0, 1))
 
     @staticmethod
     def _sparse_postings_frame(df: DataFrame, pk: str, sv_col: str) -> DataFrame:
@@ -4073,18 +3913,10 @@ class VechordRegistry:
         fragmentation accumulates. Holds the maintenance lock (same
         check-then-append double-append window as the other
         extends)."""
-        spec = self._spec(name)
-        sv = spec.sparse_column
-        if sv is None:
-            raise SchemaError(f"table {name} has no sparse vector column")
-        pk = spec.primary_key
+        sv, ipath = self._open_layout(name, "sparse")
+        pk = self._spec(name).primary_key
         if pk is None:
             raise SchemaError("extend_sparse_index needs a primary key")
-        ipath = self._sparse_index_path(name)
-        if not (ipath / "postings").exists():
-            raise SchemaError(
-                f"no sparse index for {name}; call build_sparse_index first"
-            )
         with self._maintenance_lock(ipath):
             new, covered = self._new_rows_since_index(name, ipath)
             if new is None:
@@ -4099,7 +3931,14 @@ class VechordRegistry:
                 new = base.filter(F.col(sv.name).isNotNull()).join(
                     indexed, pk.name, "left_anti"
                 )
-            n_new = new.count()
+                docs = None
+            else:
+                docs = self._vector_index_meta(ipath).get("docs")
+            n = new.agg(
+                F.count(F.lit(1)).alias("n"),
+                self._nonempty_sparse(sv.name).alias("docs"),
+            ).first()
+            n_new = int(n["n"])
             if n_new:
                 self._mark_extend_intent(ipath)
                 self._sparse_postings_frame(
@@ -4107,8 +3946,9 @@ class VechordRegistry:
                 ).repartitionByRange(2, F.col("idx")).sortWithinPartitions(
                     "idx"
                 ).write.mode("append").parquet(str(ipath / "postings"))
+            self._set_sparse_docs(ipath, None if docs is None else docs + n["docs"])
             self._record_index_files(name, ipath, files=covered)
-            return int(n_new)
+            return n_new
 
     def search_by_sparse(
         self,
@@ -4130,14 +3970,8 @@ class VechordRegistry:
         neighbors were discarded after the fact — a pk semi-join from
         the filtered table into the matched postings."""
         spec = self._spec(name)
-        if spec.sparse_column is None:
-            raise SchemaError(f"table {name} has no sparse vector column")
+        _, ipath = self._open_layout(name, "sparse")
         pk = spec.primary_key
-        ipath = self._sparse_index_path(name)
-        if not (ipath / "postings").exists():
-            raise SchemaError(
-                f"no sparse index for {name}; call build_sparse_index first"
-            )
         fields = list(return_fields) if return_fields else spec.non_vec_columns()
         posts = self.spark.read.parquet(str(ipath / "postings"))
         if not query:
@@ -4202,14 +4036,8 @@ class VechordRegistry:
         from pyspark.sql import Window
 
         spec = self._spec(name)
-        if spec.sparse_column is None:
-            raise SchemaError(f"table {name} has no sparse vector column")
+        _, ipath = self._open_layout(name, "sparse")
         pk = spec.primary_key
-        ipath = self._sparse_index_path(name)
-        if not (ipath / "postings").exists():
-            raise SchemaError(
-                f"no sparse index for {name}; call build_sparse_index first"
-            )
         if not len(queries):
             raise ValueError("queries must be a non-empty list")
         fields = list(return_fields) if return_fields else spec.non_vec_columns()
@@ -4313,7 +4141,6 @@ class VechordRegistry:
         query: str,
         topk: int = 10,
         return_fields: Sequence[str] | None = None,
-        use_index: bool = True,
         conditions: Mapping[str, Any] | None = None,
     ) -> DataFrame:
         """BM25 keyword top-k (reference vechord/registry.py:269-302).
@@ -4341,19 +4168,18 @@ class VechordRegistry:
         if conditions:
             base = self.load(name)
             cand = base.filter(build_predicate(base, conditions)).select(pk.name)
-        if use_index:
-            index = self._load_keyword_index(name)
-            if index is not None:
-                hits = index.topk(query, k=topk, candidates=cand)
-                payload = self.load(name).select(*{*fields, pk.name})
-                return (
-                    hits.withColumnRenamed("doc_id", "__hit_id")
-                    .join(payload, F.col("__hit_id") == F.col(pk.name), "inner")
-                    .select(*fields, "score", "rank")
-                    # the payload join reorders rows; callers expect
-                    # ranked output (matching search_by_vector)
-                    .orderBy("rank")
-                )
+        index = self._load_keyword_index(name)
+        if index is not None:
+            hits = index.topk(query, k=topk, candidates=cand)
+            payload = self.load(name).select(*{*fields, pk.name})
+            return (
+                hits.withColumnRenamed("doc_id", "__hit_id")
+                .join(payload, F.col("__hit_id") == F.col(pk.name), "inner")
+                .select(*fields, "score", "rank")
+                # the payload join reorders rows; callers expect
+                # ranked output (matching search_by_vector)
+                .orderBy("rank")
+            )
         idx = kw_col.index
         hits = bm25_topk(
             self.load(name),

@@ -303,10 +303,11 @@ def stream_to_registry(
     rows) via the file ledger as the stream runs, so probe/postings
     searches stay current without an external scheduler. Every
     maintain step is gated on measured signals, so a quiet stream
-    pays only the stats reads; a concurrent maintainer surfaces as
-    :class:`MaintenanceBusy`, which is SWALLOWED here (retryable —
-    the next eligible epoch catches up, and maintenance is never
-    load-bearing for correctness of the appended data).
+    pays only the stats reads and one table row count; a concurrent
+    maintainer surfaces as :class:`MaintenanceBusy`, which is
+    SWALLOWED here (retryable — the next eligible epoch catches up,
+    and maintenance is never load-bearing for correctness of the
+    appended data).
 
     Single-writer contract per table, same as batch append.
     """
