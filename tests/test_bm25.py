@@ -85,19 +85,37 @@ def test_bm25_index_and_oneshot_score_identically(corpus_df):
     """The persisted-index path and the query-pruned one-shot are the
     same scoring function on different plans — the suite's bm25_topk
     entry (round 10) relies on this equality to reuse the one-shot's
-    oracle against the index plan."""
-    idx = Bm25Index(corpus_df, "doc_id", "text")
-    via_index = [
-        (r.doc_id, r.score, r.rank)
-        for r in idx.topk("quick fox dog", k=10).collect()
-    ]
+    oracle against the index plan. With the corpus stats read into
+    literals (``inline_stats``, the registry's held handles) the index
+    plan takes its fast path and still scores identically."""
     via_oneshot = [
         (r.doc_id, r.score, r.rank)
         for r in bm25_topk(
             corpus_df, "doc_id", "text", "quick fox dog", k=10
         ).collect()
     ]
-    assert sorted(via_index) == sorted(via_oneshot)
+    for idx in (
+        Bm25Index(corpus_df, "doc_id", "text"),
+        Bm25Index(corpus_df, "doc_id", "text").inline_stats(),
+    ):
+        via_index = [
+            (r.doc_id, r.score, r.rank)
+            for r in idx.topk("quick fox dog", k=10).collect()
+        ]
+        assert sorted(via_index) == sorted(via_oneshot)
+
+
+def test_bm25_index_over_empty_corpus(spark):
+    """An empty corpus has no avgdl: reading its stats keeps the
+    general path instead of failing, so an index built over an empty
+    table (or swept empty by maintain()) answers with no rows."""
+    empty = spark.createDataFrame([], "doc_id int, text string")
+    idx = Bm25Index(empty, "doc_id", "text").persist(eager=True)
+    try:
+        assert idx.topk("quick fox", k=3).count() == 0
+    finally:
+        for df in (idx.postings, idx.doclen, idx.docfreq):
+            df.unpersist()
 
 
 def test_bm25_empty_query_schema_stable(spark):

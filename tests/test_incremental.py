@@ -673,3 +673,83 @@ def test_compact_index_swap_crash_recovers(reg, spark):
         assert journal.exists() and tmp.exists()
     assert "sparse" in reg.index_stats("sp")
     assert not journal.exists() and not tmp.exists() and posts.exists()
+
+
+def test_held_layout_handles_follow_every_write(spark, tmp_path):
+    """A registry holds each layout's read handle per on-disk
+    generation: after every kind of write the next search equals the
+    same search on a fresh registry over the same path (nothing held)
+    — both extends, a delete swept by maintain(), compact_index, and
+    an append + extend and a drop + rebuild made through a second
+    registry."""
+    from vechord_spark.spec import AnyOf, Keyword
+
+    spec = TableSpec(
+        "doc",
+        [
+            Column("uid", "int", primary_key=True),
+            Column("body", Keyword()),
+            Column("vec", Vector(8)),
+        ],
+    )
+
+    def rows(ids, seed):
+        out = _rows(ids, seed)
+        for r in out:
+            r["body"] = f"w{r['uid'] % 7} common" + (" plantx" * (r["uid"] % 3))
+        return out
+
+    def registry():
+        r = VechordRegistry("held", str(tmp_path), spark)
+        r.register(spec)
+        return r
+
+    def keyword(r):
+        hits = r.search_by_keyword("doc", "plantx w2", topk=6).collect()
+        return [(x.uid, x.score) for x in hits]
+
+    def probe(r):
+        hits = r.search_by_vector("doc", [0.4] * 8, topk=6, probes=2).collect()
+        return [(x.uid, x.distance) for x in hits]
+
+    def check(*searches):
+        got = [s(reg) for s in searches]
+        fresh = registry()
+        assert got == [s(fresh) for s in searches]
+        return got
+
+    reg = registry()
+    reg.insert_rows("doc", rows(range(60), seed=1))
+    reg.build_keyword_index("doc")
+    reg.build_vector_index("doc", lists=4)
+    kw0, ivf0 = check(keyword, probe)  # fills the held handles
+
+    reg.insert_rows("doc", rows(range(60, 90), seed=2))
+    assert reg.extend_keyword_index("doc") == 30
+    (kw1,) = check(keyword)
+    assert reg.extend_vector_index("doc") == 30
+    (ivf1,) = check(probe)
+    assert (kw1, ivf1) != (kw0, ivf0)
+
+    reg.remove_by("doc", {"uid": AnyOf([kw1[0][0], ivf1[0][0]])})
+    reg.maintain("doc")
+    kw2, ivf2 = check(keyword, probe)
+    assert kw2 != kw1 and ivf2 != ivf1
+
+    reg.compact_index("doc")
+    assert check(keyword, probe) == [kw2, ivf2]
+
+    other = registry()
+    other.insert_rows("doc", rows(range(90, 120), seed=3))
+    other.extend_keyword_index("doc")
+    other.extend_vector_index("doc")
+    kw3, ivf3 = check(keyword, probe)
+    assert (kw3, ivf3) != (kw2, ivf2)
+
+    other.drop("doc")
+    other.register(spec)
+    other.insert_rows("doc", rows(range(40), seed=4))
+    other.build_keyword_index("doc")
+    other.build_vector_index("doc", lists=4)
+    kw4, ivf4 = check(keyword, probe)
+    assert ivf4 != ivf3 and kw4 != kw3

@@ -928,3 +928,75 @@ def test_recluster_on_opq_layout(spark, tmp_path):
     ]
     assert got == exact
     assert all(uid >= 1000 for uid in got)
+
+
+def test_held_layout_handles_skip_load_jobs(spark, tmp_path):
+    """On an unchanged layout the registry reuses the handle it
+    opened: building a second keyword search's plan runs at most one
+    job (the docfreq lookup) and no parquet schema-inference job, and
+    a second IVF probe search's plan runs none — also after an equal
+    spec is registered again (as every pipeline construction does).
+    A spec with other BM25 settings reads the layout again."""
+    import random
+
+    from vechord_spark.spec import KeywordIndex
+
+    def spec(kw_index=None):
+        return TableSpec(
+            "doc",
+            [
+                Column("uid", "int", primary_key=True),
+                Column("body", Keyword(), index=kw_index),
+                Column("vec", Vector(4)),
+            ],
+        )
+
+    reg = VechordRegistry("held", str(tmp_path), spark)
+    reg.register(spec())
+    random.seed(5)
+    reg.insert_rows(
+        "doc",
+        [
+            {
+                "uid": i,
+                "body": f"w{i % 5} common" + " pad" * (i % 3),
+                "vec": [random.uniform(-1, 1) for _ in range(4)],
+            }
+            for i in range(40)
+        ],
+    )
+    reg.build_keyword_index("doc")
+    reg.build_vector_index("doc", lists=2)
+    sc = spark.sparkContext
+
+    def plan_jobs(group, build):
+        """Per job run while ``build()`` makes a plan: its stage names."""
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        return [
+            [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+            for j in st.getJobIdsForGroup(group)
+        ]
+
+    def keyword():
+        return reg.search_by_keyword("doc", "w3 common", topk=5)
+
+    def probe():
+        return reg.search_by_vector("doc", [0.1, 0.2, 0.3, 0.4], topk=5, probes=2)
+
+    first = (keyword().collect(), probe().collect())
+    kw_jobs = plan_jobs("held-keyword", keyword)
+    assert len(kw_jobs) <= 1
+    assert not [n for names in kw_jobs for n in names if n.startswith("parquet")]
+    assert plan_jobs("held-probe", probe) == []
+    assert (keyword().collect(), probe().collect()) == first
+
+    reg.register(spec())
+    assert plan_jobs("held-reregistered", probe) == []
+    reg.register(spec(KeywordIndex(k1=2.0)))
+    assert keyword().collect() != first[0]

@@ -113,6 +113,42 @@ def test_run_index_then_search(svc):
     assert status == 200 and res["type"] == "search" and len(res["chunks"]) >= 1
 
 
+def test_negative_limits_are_422(svc):
+    """A negative ``topk`` (/api/pipeline, /api/run) or ``__limit``
+    (table GET) is rejected as 422 where the request is parsed, never
+    reaching Spark as a plan error; 0 asks for no rows."""
+    from vechord_spark.plans.dynamic import DynamicPipeline
+
+    reg = svc.registry
+    app = create_web_app(reg, DynamicPipeline.from_steps(reg, RUN_STEPS))
+    status, _, _ = app.handle(
+        "POST",
+        "/api/pipeline",
+        body=json.dumps(
+            {"op": "index", "docs": [{"doc_id": 1, "text": "spark engine scales"}]}
+        ).encode(),
+    )
+    assert status == 200
+
+    def search(path, topk):
+        if path == "/api/pipeline":
+            req = {"query": "spark", "topk": topk}
+        else:
+            req = {"name": "svc", "data": "spark", "steps": RUN_STEPS
+                   + [{"kind": "search", "provider": "local", "args": {"topk": topk}}]}
+        return app.handle("POST", path, body=json.dumps(req).encode())
+
+    for path in ("/api/pipeline", "/api/run"):
+        status, _, body = search(path, -1)
+        assert status == 422 and b"topk" in body and b"Exception" not in body
+        status, _, body = search(path, 0)
+        assert status == 200 and _json(body)["chunks"] == []
+    status, _, body = _get(app, "/api/table/document", {"__limit": "-1"})
+    assert status == 422 and b"__limit" in body
+    status, _, body = _get(app, "/api/table/document", {"__limit": "0"})
+    assert status == 200 and _json(body) == []
+
+
 def test_run_requires_direction_step(svc):
     status, _, _ = svc.handle(
         "POST",

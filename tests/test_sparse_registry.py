@@ -317,3 +317,41 @@ def test_maintain_prunes_deleted_rows_from_postings_layouts(spark, tmp_path):
     r.compact("doc")
     delta, _ = r._new_rows_since_index("doc", r._sparse_index_path("doc"))
     assert delta is not None and delta.count() == 0
+
+
+def test_held_sparse_postings_follow_every_write(spark, tmp_path):
+    """The sparse postings frame is held per on-disk generation: after
+    an extend, a delete swept by maintain(), compact_index and an
+    append + extend through a second registry, the next single and
+    batch search equal the same searches on a fresh registry."""
+    from vechord_spark.spec import AnyOf
+
+    r = _registry(spark, tmp_path, "held")
+    r.insert_rows("doc", _rows())
+    r.build_sparse_index("doc")
+    q = {7: 1.0, 50: 2.0}
+
+    def searches(reg):
+        one = [(x.uid, x.score) for x in reg.search_by_sparse("doc", q, topk=3).collect()]
+        batch = reg.search_by_sparse_batch("doc", [q, {3: 1.0}], topk=3).collect()
+        return one, [(x.query_id, x.uid, x.score) for x in batch]
+
+    def check():
+        got = searches(r)
+        assert got == searches(_registry(spark, tmp_path, "held"))
+        return got
+
+    seen = [check()]
+    r.insert_rows("doc", [{"uid": 9, "title": "z", "sv": ([7, 3], [10.0, 1.0])}])
+    assert r.extend_sparse_index("doc") == 1
+    seen.append(check())
+    r.remove_by("doc", {"uid": AnyOf([9, 2])})
+    r.maintain("doc")
+    seen.append(check())
+    r.compact_index("doc")
+    assert check() == seen[-1]
+    other = _registry(spark, tmp_path, "held")
+    other.insert_rows("doc", [{"uid": 11, "title": "y", "sv": ([50], [7.0])}])
+    assert other.extend_sparse_index("doc") == 1
+    seen.append(check())
+    assert all(a != b for a, b in zip(seen, seen[1:]))

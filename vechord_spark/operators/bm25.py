@@ -163,7 +163,19 @@ class Bm25Index:
         if eager:
             if materialize:
                 self.postings.count()
-            row = self.stats.first()
+            self.inline_stats()
+        return self
+
+    def inline_stats(self) -> "Bm25Index":
+        """Read the one-row corpus stats table (one small job) so that
+        every later query takes the literal fast path of
+        :meth:`_term_scores`: n_docs and avgdl inline into the plan as
+        literals, next to the df values of one pushed docfreq lookup,
+        instead of riding a broadcast stats exchange per query. Caches
+        no data. An empty corpus (no avgdl) keeps the general path.
+        Returns ``self``."""
+        row = self.stats.first()
+        if row is not None and row["avgdl"] is not None:
             self._stats_row = (int(row["n_docs"]), float(row["avgdl"]))
         return self
 

@@ -126,6 +126,10 @@ class VechordRegistry:
         self.tables: dict[str, TableSpec] = {}
         # (table, column) -> INSERT-time default for ALTER-added columns
         self._column_defaults: dict[tuple[str, str], Any] = {}
+        # (table, layout kind) -> (generation, handle): every read-side
+        # layout load opens the layout once per on-disk generation
+        # (see _layout_handle)
+        self._layout_handles: dict[tuple[str, str], tuple[tuple, Any]] = {}
 
     # ------------------------------------------------------------------ DDL
     def table_path(self, name: str) -> str:
@@ -331,6 +335,8 @@ class VechordRegistry:
         self._column_defaults = {
             k: v for k, v in self._column_defaults.items() if k[0] != name
         }
+        for kind in self._LAYOUT_DIRS:
+            self._layout_handles.pop((name, kind), None)
         del self.tables[spec.name]
 
     def clear_storage(self, drop_table: bool = True) -> None:
@@ -1563,6 +1569,55 @@ class VechordRegistry:
                 f"no {layout_noun} index for {name}; call {build} first"
             )
         return col, ipath
+
+    @staticmethod
+    def _layout_fingerprint(ipath: Path) -> tuple:
+        """The on-disk generation of a layout: the sorted ``(relative
+        path, size, mtime_ns, inode)`` of every file under ``ipath``
+        except ``maintain.lock``. Every write adds, removes or rewrites
+        a file (build, extend, prune, recluster, merge, compact_index
+        swap, drop, and writers in other registries or processes on
+        the same path), so every write changes it. One directory walk,
+        no more than the listing ``spark.read.parquet`` does."""
+        import os
+
+        out = []
+        for root, _dirs, files in os.walk(ipath):
+            for f in files:
+                if f == "maintain.lock":
+                    continue
+                p = os.path.join(root, f)
+                try:
+                    st = os.stat(p)
+                except FileNotFoundError:
+                    continue  # removed by a concurrent writer mid-walk
+                out.append(
+                    (os.path.relpath(p, ipath), st.st_size, st.st_mtime_ns, st.st_ino)
+                )
+        return tuple(sorted(out))
+
+    def _layout_handle(self, name: str, kind: str, ipath: Path, read):
+        """The read-side handle of the ``kind`` layout of ``name``
+        (what ``read()`` returns), opened once per on-disk generation:
+        ``read()`` runs only when the layout's fingerprint
+        (:meth:`_layout_fingerprint`) or the table's spec differs from
+        the one the held handle was read at (handles carry the indexed
+        column, the primary key and BM25's k1/b; re-registering an
+        equal spec, as every pipeline construction does, keeps them).
+        Callers run crash recovery first, so a repaired layout is
+        fingerprinted as repaired. The fingerprint is taken BEFORE the
+        read: a write racing the read leaves the new handle under the
+        older fingerprint, and the next call reads again. Handles hold
+        plans, centroids and small driver-side rows, never cached
+        data. Loads under the layout's maintenance lock do not come
+        here: a write never derives from a held handle."""
+        gen = (self._spec(name), self._layout_fingerprint(ipath))
+        held = self._layout_handles.get((name, kind))
+        if held is not None and held[0] == gen:
+            return held[1]
+        handle = read()
+        self._layout_handles[(name, kind)] = (gen, handle)
+        return handle
 
     def _extenders(self) -> dict:
         """kind -> the public extend_* of that layout."""
@@ -3014,9 +3069,14 @@ class VechordRegistry:
         return n_lists
 
     def _load_multivec_index(self, name: str):
+        mv_col, ipath = self._open_layout(name, "mvivf")
+        return self._layout_handle(
+            name, "mvivf", ipath, lambda: self._read_multivec_layout(ipath, mv_col.name)
+        )
+
+    def _read_multivec_layout(self, ipath: Path, mv_col: str):
         from vechord_spark.operators.ivf import IvfIndex, MultiVecIvfIndex
 
-        mv_col, ipath = self._open_layout(name, "mvivf")
         token_centroids = None
         if (ipath / "token_centroids").exists():
             token_centroids = self._read_centroids(ipath / "token_centroids")
@@ -3026,20 +3086,25 @@ class VechordRegistry:
                 self.spark.read.parquet(str(ipath / "data")),
                 "__mean",
             ),
-            mv_col.name,
+            mv_col,
             token_centroids=token_centroids,
         )
 
     def _load_vector_index(self, name: str):
+        vec_col, ipath = self._open_layout(name, "ivf")
+        return self._layout_handle(
+            name, "ivf", ipath, lambda: self._read_vector_layout(ipath, vec_col.name)
+        )
+
+    def _read_vector_layout(self, ipath: Path, vec_col: str):
         from vechord_spark.operators.ivf import IvfIndex
 
-        vec_col, ipath = self._open_layout(name, "ivf")
         meta = self._vector_index_meta(ipath)
         assigned = self.spark.read.parquet(str(ipath / "data"))
         ivf = IvfIndex(
             self._read_centroids(ipath / "centroids"),
             assigned,
-            vec_col.name,
+            vec_col,
             spherical=bool(meta.get("spherical")),
         )
         book = self._load_codebooks(ipath)
@@ -3782,16 +3847,31 @@ class VechordRegistry:
         """The persisted BM25 index of ``name`` (postings, doclen,
         docfreq, stats and the tokenizer it was built with), or None
         when none was built — the keyword search then falls back to
-        the one-shot plan. ``locked``: the caller holds the layout's
-        maintenance lock (see :meth:`_recover_index_swap`)."""
-        import json
-
-        from vechord_spark.operators.bm25 import Bm25Index
-
+        the one-shot plan. A search's handle is held per on-disk
+        generation (:meth:`_layout_handle`) with its corpus stats read
+        once (:meth:`Bm25Index.inline_stats`), so every query takes the
+        literal-stats fast path. ``locked``: the caller holds the
+        layout's maintenance lock (see :meth:`_recover_index_swap`);
+        such a load reads the layout afresh and bypasses the held
+        handle."""
         ipath = self._layout_path(name, "bm25")
         self._recover_index_swap(ipath, "bm25", locked=locked)
         if not (ipath / "postings").exists():
             return None
+        if locked:
+            return self._read_keyword_layout(name, ipath)
+        return self._layout_handle(
+            name,
+            "bm25",
+            ipath,
+            lambda: self._read_keyword_layout(name, ipath).inline_stats(),
+        )
+
+    def _read_keyword_layout(self, name: str, ipath: Path):
+        import json
+
+        from vechord_spark.operators.bm25 import Bm25Index
+
         spec = self._spec(name)
         tokenizer = None  # engine tokenizer unless meta says otherwise
         meta_path = ipath / "meta.json"
@@ -3950,6 +4030,17 @@ class VechordRegistry:
             self._record_index_files(name, ipath, files=covered)
             return n_new
 
+    def _sparse_postings(self, name: str) -> DataFrame:
+        """The persisted sparse postings frame of ``name``, held per
+        on-disk generation (:meth:`_layout_handle`)."""
+        _, ipath = self._open_layout(name, "sparse")
+        return self._layout_handle(
+            name,
+            "sparse",
+            ipath,
+            lambda: self.spark.read.parquet(str(ipath / "postings")),
+        )
+
     def search_by_sparse(
         self,
         name: str,
@@ -3970,10 +4061,9 @@ class VechordRegistry:
         neighbors were discarded after the fact — a pk semi-join from
         the filtered table into the matched postings."""
         spec = self._spec(name)
-        _, ipath = self._open_layout(name, "sparse")
+        posts = self._sparse_postings(name)
         pk = spec.primary_key
         fields = list(return_fields) if return_fields else spec.non_vec_columns()
-        posts = self.spark.read.parquet(str(ipath / "postings"))
         if not query:
             return (
                 self.load(name).select(*fields).limit(0)
@@ -4036,7 +4126,7 @@ class VechordRegistry:
         from pyspark.sql import Window
 
         spec = self._spec(name)
-        _, ipath = self._open_layout(name, "sparse")
+        posts = self._sparse_postings(name)
         pk = spec.primary_key
         if not len(queries):
             raise ValueError("queries must be a non-empty list")
@@ -4058,7 +4148,6 @@ class VechordRegistry:
         qdf = self.spark.createDataFrame(
             pairs, "query_id int, idx int, qw double"
         )
-        posts = self.spark.read.parquet(str(ipath / "postings"))
         matched = posts.filter(
             F.col("idx").isin(sorted({i for _, i, _ in pairs}))
         )

@@ -85,6 +85,16 @@ def _json_value(v: Any) -> Any:
     return v
 
 
+def _row_limit(value: Any, name: str) -> int:
+    """A request's row bound (``topk``, ``__limit``) as an int >= 0;
+    0 asks for no rows. A negative bound is the client's error (422),
+    not a Spark plan failure."""
+    n = int(value)
+    if n < 0:
+        raise ServiceError(422, f"{name} must be >= 0, got {n}")
+    return n
+
+
 def rows_to_json(df: DataFrame, limit: int) -> list[dict[str, Any]]:
     """Bounded collect: the ``limit`` is part of the Spark plan (a
     CollectLimit over the scan), not a post-collect slice."""
@@ -227,7 +237,7 @@ class VechordService:
             raise ServiceError(404, f"unknown table {name!r}")
         spec = self.registry.tables[name]
         if method == "GET":
-            limit = int(params.pop("__limit", MAX_ROWS_DEFAULT))
+            limit = _row_limit(params.pop("__limit", MAX_ROWS_DEFAULT), "__limit")
             conditions = self._coerce_params(spec, params)
             df = self.registry.select_by(name, conditions or None)
             return 200, "application/json", json.dumps(rows_to_json(df, limit)).encode()
@@ -407,7 +417,7 @@ class VechordService:
             query = payload.get("query")
             if not isinstance(query, str) or not query:
                 raise ServiceError(422, "search op requires a 'query' string")
-            topk = int(payload.get("topk", 10))
+            topk = _row_limit(payload.get("topk", 10), "topk")
             df = pipe.run_search(query, topk=topk)
             return (
                 200,
@@ -462,7 +472,7 @@ class VechordService:
                     {"type": "ingest", "name": name, "msg": "indexed", "uid": str(doc_id), **counts}
                 ).encode(),
             )
-        topk = int(options["search"].get("topk", 10))
+        topk = _row_limit(options["search"].get("topk", 10), "topk")
         df = pipe.run_search(data, topk=topk)
         return (
             200,
