@@ -30,11 +30,11 @@ def _registry(spark, tmp_path, ns):
     return r
 
 
-def _file_ranges(table_dir: Path, col: str) -> list[tuple[int, int]]:
+def _file_ranges(files: list[Path], col: str) -> list[tuple[int, int]]:
     """(min, max) of ``col`` per live parquet file, from the footer
     statistics — exactly what a zone-map-pruning reader consults."""
     out = []
-    for p in sorted(table_dir.glob("*.parquet")):
+    for p in files:
         md = pq.ParquetFile(p).metadata
         idx = md.schema.to_arrow_schema().get_field_index(col)
         lo, hi = None, None
@@ -58,8 +58,11 @@ def _fill(r, n=4000, seed=7):
     return rows
 
 
-def _live_files(r) -> Path:
-    return Path(r.table_path("pts"))
+def _live_files(r) -> list[Path]:
+    """The parquet files of the table's latest commit (the directory
+    also keeps files a compaction removed, until vacuum)."""
+    table = Path(r.table_path("pts"))
+    return [table / f for f in sorted(r._ensure_log("pts").snapshot().files)]
 
 
 def test_compact_order_by_makes_files_disjoint(spark, tmp_path):
@@ -94,7 +97,7 @@ def test_compact_zorder_narrows_both_columns(spark, tmp_path):
     assert base_x > 8000 and base_y > 8000
 
     r.compact("pts", target_file_bytes=8192, zorder_by=["x", "y"])
-    n_files = len(list(_live_files(r).glob("*.parquet")))
+    n_files = len(_live_files(r))
     assert n_files >= 3
     zx, zy = mean_span("x"), mean_span("y")
     # the Z-curve keeps BOTH columns' per-file ranges narrow at once —
@@ -115,11 +118,9 @@ def test_compact_order_by_survives_reads_and_validates(spark, tmp_path):
         r.compact("pts", order_by=["x"], zorder_by=["x", "y"])
     with pytest.raises(ValueError, match=">= 2"):
         r.compact("pts", zorder_by=["x"])
-    # optimistic-concurrency registries cluster through the manifest
-    # commit path too
-    ro = VechordRegistry(
-        "clus_occ", str(tmp_path), spark, concurrency="optimistic"
-    )
+    # a registry over another namespace clusters through the same
+    # manifest commit path
+    ro = VechordRegistry("clus_occ", str(tmp_path), spark)
     ro.register(
         TableSpec(
             "pts",
@@ -159,7 +160,7 @@ def test_compact_order_by_survives_reads_and_validates(spark, tmp_path):
     assert ro.load("pts").count() == 3000
 
 
-def _scan_units(table_dir: Path, preds: dict) -> tuple[int, int, int, int]:
+def _scan_units(live: list[Path], preds: dict) -> tuple[int, int, int, int]:
     """(files_scanned, rowgroups_scanned, files_total, rowgroups_total)
     for a conjunctive range predicate ``{col: (lo, hi)}`` under
     zone-map pruning — a row group must be read iff its footer
@@ -168,7 +169,7 @@ def _scan_units(table_dir: Path, preds: dict) -> tuple[int, int, int, int]:
     skipping logic the parquet reader applies to Spark's pushed
     filters."""
     files = rgs = files_total = rgs_total = 0
-    for p in sorted(table_dir.glob("*.parquet")):
+    for p in live:
         md = pq.ParquetFile(p).metadata
         sch = md.schema.to_arrow_schema()
         files_total += 1
@@ -196,15 +197,14 @@ def test_order_by_actually_skips_files_on_range_scan(spark, tmp_path):
     the files whose slice overlaps survive the footer check."""
     r = _registry(spark, tmp_path, "skip_ob")
     _fill(r)
-    live = _live_files(r)
     pred = {"x": (4000, 4400)}  # ~4% of the 10k domain
-    f_before, _, ft_before, _ = _scan_units(live, pred)
+    f_before, _, ft_before, _ = _scan_units(_live_files(r), pred)
     # unclustered appends: zone maps prune NOTHING (every file spans
     # ~the whole domain), the scan opens all files
     assert f_before == ft_before >= 4
 
     r.compact("pts", target_file_bytes=8192, order_by=["x"])
-    f_after, rg_after, ft_after, rg_total = _scan_units(live, pred)
+    f_after, rg_after, ft_after, rg_total = _scan_units(_live_files(r), pred)
     assert ft_after >= 3
     # the same query now opens a strict subset of the layout
     assert f_after < f_before
@@ -224,14 +224,13 @@ def test_zorder_skips_on_two_key_box_scan(spark, tmp_path):
     justifies the Morton key at 100 TB."""
     r = _registry(spark, tmp_path, "skip_zo")
     rows = _fill(r, seed=11)
-    live = _live_files(r)
     box = {"x": (0, 2400), "y": (0, 2400)}  # ~6% of the 2-D domain
-    f_un, _, ft_un, _ = _scan_units(live, box)
+    f_un, _, ft_un, _ = _scan_units(_live_files(r), box)
     assert f_un == ft_un  # unclustered: no pruning at all
     expect = sum(1 for w in rows if 0 <= w["x"] <= 2400 and 0 <= w["y"] <= 2400)
 
     r.compact("pts", target_file_bytes=8192, order_by=["x"])
-    f_ob, rg_ob, ft_ob, rgt_ob = _scan_units(live, box)
+    f_ob, rg_ob, ft_ob, rgt_ob = _scan_units(_live_files(r), box)
     # x-order prunes the x dimension only: ~3/4 of files skip
     assert f_ob < ft_ob
     assert r.load("pts").filter(
@@ -240,11 +239,11 @@ def test_zorder_skips_on_two_key_box_scan(spark, tmp_path):
 
     # x-order is blind to a y-only predicate: the scan opens EVERYTHING
     ybox = {"y": (0, 2400)}
-    f_ob_y, _, _, _ = _scan_units(live, ybox)
+    f_ob_y, _, _, _ = _scan_units(_live_files(r), ybox)
     assert f_ob_y == ft_ob
 
     r.compact("pts", target_file_bytes=8192, zorder_by=["x", "y"])
-    f_zo, rg_zo, ft_zo, rgt_zo = _scan_units(live, box)
+    f_zo, rg_zo, ft_zo, rgt_zo = _scan_units(_live_files(r), box)
     # the Z-curve prunes BOTH dimensions: the box scan stays a strict
     # subset of the layout (measured 2/8 files at this shape)...
     assert ft_zo >= 3
@@ -252,7 +251,7 @@ def test_zorder_skips_on_two_key_box_scan(spark, tmp_path):
     assert f_zo <= f_ob
     # ...and the y-only predicate — unprunable under ORDER BY x —
     # now skips too (measured 4/8 vs 8/8): the multi-dimensional win
-    f_zo_y, _, _, _ = _scan_units(live, ybox)
+    f_zo_y, _, _, _ = _scan_units(_live_files(r), ybox)
     assert f_zo_y < f_ob_y
     assert f_zo_y < ft_zo
     assert r.load("pts").filter(

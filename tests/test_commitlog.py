@@ -1,5 +1,5 @@
-"""Optimistic-concurrency commit log: multi-writer appends, atomic
-rewrites, snapshot isolation, time travel, vacuum.
+"""The commit log every registry write goes through: multi-writer
+appends, atomic rewrites, snapshot isolation, time travel, vacuum.
 
 The reference inherits all of this from PostgreSQL (MVCC snapshots,
 sequences, unique indexes — vechord/registry.py:64-101 binds tables to
@@ -9,7 +9,9 @@ through one SparkSession — Spark schedules concurrent jobs fine; the
 registry's version-claim protocol is what serializes the commits.
 """
 
+import os
 import threading
+import time
 
 import pytest
 
@@ -33,7 +35,7 @@ DOC_SPEC = lambda: TableSpec(  # noqa: E731 — fresh spec per registry
 
 @pytest.fixture()
 def reg(spark, tmp_path):
-    r = VechordRegistry("occ", str(tmp_path), spark, concurrency="optimistic")
+    r = VechordRegistry("occ", str(tmp_path), spark)
     r.register(DOC_SPEC())
     return r
 
@@ -96,18 +98,85 @@ def test_vacuum_reclaims_rewrite_history_and_orphans(reg, tmp_path):
     assert reg.load("doc").count() == 9  # live data intact
 
 
+def test_rewrite_vacuums_history_past_retention(reg):
+    """A table rewritten but never maintained does not keep every
+    rewrite: each rewrite commit vacuums the files no commit references
+    once they are older than the retention, and keeps younger ones for
+    time travel."""
+    reg.insert_rows("doc", _rows(0, 10))
+    v_first = reg.table_version("doc")
+    first = reg._snapshot("doc").files
+    reg.remove_by("doc", {"uid": 0})
+    v_second = reg.table_version("doc")
+    second = reg._snapshot("doc").files
+    table_dir = Path(reg.table_path("doc"))
+    assert all((table_dir / f).exists() for f in first)  # young: kept
+    old = time.time() - 2 * reg.HISTORY_RETENTION_S
+    for f in first:
+        os.utime(table_dir / f, (old, old))
+
+    reg.remove_by("doc", {"uid": 1})
+    assert not any((table_dir / f).exists() for f in first)
+    assert all((table_dir / f).exists() for f in second)
+    assert reg.load("doc", version=v_second).count() == 9
+    assert reg.load("doc").count() == 8
+    with pytest.raises(FileNotFoundError):
+        reg.load("doc", version=v_first)
+
+
 def test_bootstrap_adopts_legacy_directory(spark, tmp_path):
-    legacy = VechordRegistry("occ", str(tmp_path), spark)
-    legacy.register(DOC_SPEC())
-    legacy.insert_rows("doc", _rows(0, 6))
-    occ = VechordRegistry("occ", str(tmp_path), spark, concurrency="optimistic")
+    # a table directory written without a log (as older versions did)
+    occ = VechordRegistry("occ", str(tmp_path), spark)
     occ.register(DOC_SPEC())
+    legacy = spark.createDataFrame([(i, f"doc {i}") for i in range(6)], "uid int, text string")
+    legacy.write.parquet(occ.table_path("doc"))
     assert occ.load("doc").count() == 6
     assert occ.history("doc")[0]["op"] == "bootstrap"
     occ.insert_rows("doc", _rows(6, 8))
     assert occ.load("doc").count() == 8
-    # a single-writer registry on the same path now reads THROUGH the log
-    assert legacy.load("doc").count() == 8
+    # a second registry on the same path reads THROUGH the log
+    other = VechordRegistry("occ", str(tmp_path), spark)
+    other.register(DOC_SPEC())
+    assert other.load("doc").count() == 8
+    assert [e["op"] for e in other.history("doc")] == ["bootstrap", "append"]
+
+
+def _plan_jobs(spark, fn):
+    """Spark jobs run while ``fn()`` builds (not executes) a plan."""
+    sc = spark.sparkContext
+    group = f"plan-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_read_plans_without_spark_jobs(reg, spark):
+    """Spark lists more than parallelPartitionDiscovery.threshold (32)
+    explicit paths with a distributed job; a snapshot read of a table
+    with more live files than that must still plan with no job — when
+    the directory holds exactly the live files, and when it also holds
+    a removed file that vacuum has not reclaimed yet (the latest
+    version, and time travel to the version before the removal)."""
+    rows = spark.createDataFrame([(i, f"doc {i}") for i in range(200)], "uid int, text string")
+    reg.append("doc", rows.repartition(48))
+    table = Path(reg.table_path("doc"))
+    assert len(reg._ensure_log("doc").snapshot().files) == 48
+    assert _plan_jobs(spark, lambda: reg.load("doc")) == 0
+    assert reg.load("doc").count() == 200
+
+    # a commit that removes one file (as a pipeline revert does)
+    log = reg._ensure_log("doc")
+    gone = log.snapshot().files[0]
+    n_gone = spark.read.parquet(str(table / gone)).count()
+    log.commit_latest(remove=[gone], op="revert")
+    assert len(log.snapshot().files) == 47 and len(list(table.glob("*.parquet"))) == 48
+    assert _plan_jobs(spark, lambda: reg.load("doc")) == 0
+    assert _plan_jobs(spark, lambda: reg.load("doc", version=1)) == 0
+    assert reg.load("doc").count() == 200 - n_gone
+    assert reg.load("doc", version=1).count() == 200
 
 
 def test_compact_is_atomic_and_preserves_rows(reg):
@@ -120,7 +189,7 @@ def test_compact_is_atomic_and_preserves_rows(reg):
 
 
 def test_cascade_goes_through_log(spark, tmp_path):
-    r = VechordRegistry("occ", str(tmp_path), spark, concurrency="optimistic")
+    r = VechordRegistry("occ", str(tmp_path), spark)
     r.register(DOC_SPEC())
     r.register(
         TableSpec(
@@ -174,7 +243,7 @@ def test_concurrent_appends_all_land(reg):
 
 
 def test_concurrent_serial_ids_never_collide(spark, tmp_path):
-    r = VechordRegistry("occ", str(tmp_path), spark, concurrency="optimistic")
+    r = VechordRegistry("occ", str(tmp_path), spark)
     r.register(
         TableSpec(
             "seq",
@@ -198,7 +267,7 @@ def test_concurrent_serial_ids_never_collide(spark, tmp_path):
 
 
 def test_concurrent_unique_collision_exactly_one_wins(spark, tmp_path):
-    r = VechordRegistry("occ", str(tmp_path), spark, concurrency="optimistic")
+    r = VechordRegistry("occ", str(tmp_path), spark)
     r.register(
         TableSpec(
             "uniq",
@@ -300,18 +369,17 @@ def test_concurrent_upserts_converge(reg):
     assert all(got[i] == f"right {i}" for i in range(5, 10))
 
 
-def test_optimistic_compact_defers_ledger_readoption(spark, tmp_path):
-    """Under optimistic concurrency, compact() must NOT snapshot the
-    index ledgers (a lost version race can fold a concurrent writer's
-    appends into the compacted files — rows no index has seen). The
-    next extend pays one anti-join and re-adopts the ledger safely."""
-    import json
+def test_compact_readopts_coverage_without_race(spark, tmp_path):
+    """A compact() whose commit lands on the version its extend-first
+    step covered records the compacted version as covered (same rows),
+    so the next extend reads only the log delta. The raced case, where
+    coverage must NOT move, is test_compact_survives_interleaved_append."""
     import random
 
     from vechord_spark.spec import Vector
 
     rng = random.Random(23)
-    r = VechordRegistry("occ_cl", str(tmp_path), spark, concurrency="optimistic")
+    r = VechordRegistry("occ_cl", str(tmp_path), spark)
     r.register(
         TableSpec(
             "emb",
@@ -329,12 +397,13 @@ def test_optimistic_compact_defers_ledger_readoption(spark, tmp_path):
     # pending rows were indexed by compact's extend-first step...
     ids = [x.uid for x in spark.read.parquet(str(ipath / "data")).collect()]
     assert len(ids) == len(set(ids)) == 50
-    # ...but the ledger was NOT re-pointed at the compacted files
-    ledger = set(json.loads((ipath / "files.json").read_text()))
-    assert ledger != set(r.load("emb").inputFiles())
-    # day-N extend: anti-join fallback indexes the new rows and
-    # re-adopts the ledger
+    # ...and the layout covers the compacted version
+    assert r.history("emb")[-1]["op"] == "compact"
+    assert r._covered_version(ipath) == r.table_version("emb")
+    # day-N extend reads the log delta, not the anti-join
     r.insert_rows("emb", rows(range(100, 106)))
+    delta, _ = r._new_rows_since_index("emb", ipath)
+    assert delta is not None and delta.count() == 6
     assert r.extend_vector_index("emb") == 6
     assert r._new_rows_since_index("emb", ipath)[0].count() == 0
 
@@ -345,7 +414,7 @@ def test_compact_survives_interleaved_append(spark, tmp_path, monkeypatch):
     Compact must lose the version race, re-run against the winner's
     snapshot, and publish a table that contains BOTH the original rows
     and the interleaved batch — no lost rows, and the index ledger
-    stays safe (next extend re-adopts via the anti-join)."""
+    coverage stays safe (next extend re-adopts via the anti-join)."""
     import random
     from pathlib import Path
 
@@ -355,7 +424,7 @@ def test_compact_survives_interleaved_append(spark, tmp_path, monkeypatch):
     rows = lambda ids: [
         {"uid": i, "vec": [rng.uniform(-1, 1) for _ in range(8)]} for i in ids
     ]
-    r1 = VechordRegistry("occ_race", str(tmp_path), spark, concurrency="optimistic")
+    r1 = VechordRegistry("occ_race", str(tmp_path), spark)
     spec = TableSpec(
         "emb", [Column("uid", "int", primary_key=True), Column("vec", Vector(8))]
     )
@@ -365,7 +434,7 @@ def test_compact_survives_interleaved_append(spark, tmp_path, monkeypatch):
     r1.build_vector_index("emb", lists=2)
 
     # an independent writer over the same storage
-    r2 = VechordRegistry("occ_race", str(tmp_path), spark, concurrency="optimistic")
+    r2 = VechordRegistry("occ_race", str(tmp_path), spark)
     r2.register(spec)
 
     # _ensure_log builds a fresh TableLog per call, so the hook must
@@ -393,15 +462,16 @@ def test_compact_survives_interleaved_append(spark, tmp_path, monkeypatch):
     snap = r1._ensure_log("emb").snapshot()
     live = Path(r1.table_path("emb"))
     assert snap.files and all((live / f).exists() for f in snap.files)
-    # ledger not corrupted: it was left un-readopted (compacted files
-    # hold the raced rows no index saw), and the next extend indexes
-    # exactly the 5 raced rows via the anti-join fallback
+    # coverage not corrupted: it stays before the compact (the
+    # compacted files hold the raced rows no index saw), and the next
+    # extend indexes exactly the 5 raced rows via the anti-join
     ipath = r1._index_path("emb")
-    assert (ipath / "files.json").exists()
+    assert r1._covered_version(ipath) < r1.table_version("emb") - 1
+    assert r1._new_rows_since_index("emb", ipath)[0] is None
     assert r1.extend_vector_index("emb") == 5
     ids = [x.uid for x in spark.read.parquet(str(ipath / "data")).collect()]
     assert sorted(ids) == sorted(list(range(30)) + list(range(100, 105)))
-    # ledger re-adopted: nothing pending afterwards
+    # coverage re-adopted: nothing pending afterwards
     assert r1._new_rows_since_index("emb", ipath)[0].count() == 0
 
 
@@ -421,12 +491,12 @@ def test_extend_during_compact_commit_window(spark, tmp_path, monkeypatch):
     spec = TableSpec(
         "emb", [Column("uid", "int", primary_key=True), Column("vec", Vector(8))]
     )
-    rB = VechordRegistry("occ_xc", str(tmp_path), spark, concurrency="optimistic")
+    rB = VechordRegistry("occ_xc", str(tmp_path), spark)
     rB.register(spec)
     rB.insert_rows("emb", rows(range(30)))
     rB.build_vector_index("emb", lists=2)
 
-    rA = VechordRegistry("occ_xc", str(tmp_path), spark, concurrency="optimistic")
+    rA = VechordRegistry("occ_xc", str(tmp_path), spark)
     rA.register(spec)
 
     from vechord_spark.plans.commitlog import TableLog
@@ -454,8 +524,8 @@ def test_extend_during_compact_commit_window(spark, tmp_path, monkeypatch):
         x.uid for x in spark.read.parquet(str(ipath / "data")).collect()
     )
     assert ids == expect
-    # A's ledger went stale at compact's publish; the next extend
-    # re-adopts via the anti-join with nothing to add
+    # compact re-ran on the version A's extend covered, so the layout
+    # covers the compacted version: nothing to add
     assert rB.extend_vector_index("emb") == 0
     assert rB._new_rows_since_index("emb", ipath)[0].count() == 0
 
@@ -477,13 +547,13 @@ def test_compact_during_extend_skips_busy_index(spark, tmp_path, monkeypatch):
     spec = TableSpec(
         "emb", [Column("uid", "int", primary_key=True), Column("vec", Vector(8))]
     )
-    rA = VechordRegistry("occ_cx", str(tmp_path), spark, concurrency="optimistic")
+    rA = VechordRegistry("occ_cx", str(tmp_path), spark)
     rA.register(spec)
     rA.insert_rows("emb", rows(range(30)))
     rA.build_vector_index("emb", lists=2)
     rA.insert_rows("emb", rows(range(300, 305)))  # A's pending delta
 
-    rB = VechordRegistry("occ_cx", str(tmp_path), spark, concurrency="optimistic")
+    rB = VechordRegistry("occ_cx", str(tmp_path), spark)
     rB.register(spec)
 
     orig_mark = VechordRegistry._mark_extend_intent
@@ -508,8 +578,8 @@ def test_compact_during_extend_skips_busy_index(spark, tmp_path, monkeypatch):
         x.uid for x in spark.read.parquet(str(ipath / "data")).collect()
     )
     assert ids == expect
-    # A recorded pre-compact files -> stale ledger -> anti-join
-    # fallback re-adopts with nothing new
+    # A recorded the pre-compact version -> the compact's remove entry
+    # sends the next extend through the anti-join, with nothing new
     assert rA.extend_vector_index("emb") == 0
     assert rA._new_rows_since_index("emb", ipath)[0].count() == 0
 
@@ -529,12 +599,12 @@ def test_concurrent_extends_mutually_excluded(spark, tmp_path):
     spec = TableSpec(
         "emb", [Column("uid", "int", primary_key=True), Column("vec", Vector(8))]
     )
-    r1 = VechordRegistry("occ_mx", str(tmp_path), spark, concurrency="optimistic")
+    r1 = VechordRegistry("occ_mx", str(tmp_path), spark)
     r1.register(spec)
     r1.insert_rows("emb", rows(range(20)))
     r1.build_vector_index("emb", lists=2)
     r1.insert_rows("emb", rows(range(100, 104)))
-    r2 = VechordRegistry("occ_mx", str(tmp_path), spark, concurrency="optimistic")
+    r2 = VechordRegistry("occ_mx", str(tmp_path), spark)
     r2.register(spec)
 
     ipath = r1._index_path("emb")
@@ -690,7 +760,8 @@ def test_extend_recovers_crashed_recluster(spark, tmp_path, monkeypatch):
     caller itself and recovery used to be silently skipped: extend
     then either failed with a misleading 'no IVF index' (data renamed
     away) or appended rows the next unlocked load rolled back while
-    files.json already marked them covered (permanently unindexed)."""
+    the covered version already counted them (permanently
+    unindexed)."""
     r, rows = _vec_registry(spark, tmp_path, ns="reclex")
     r.insert_rows("emb", rows(range(10), [0, 0, 0, 0]))
     r.insert_rows("emb", rows(range(10, 20), [5, 5, 5, 5]))
@@ -799,6 +870,45 @@ def test_prune_then_merge_after_heavy_delete(spark, tmp_path):
     assert all(25 <= u < 50 for u in got)
     # idempotent: a second merge finds nothing starved
     assert r.merge_vector_index("emb", min_cell_factor=4.0)["merged_cells"] == 0
+
+
+def test_merge_into_cell_with_same_part_names(spark, tmp_path):
+    """One build job writes the same part names into every cell, so a
+    merge that links a starved cell into its sibling renames the
+    colliding files — the data file AND its hidden checksum sidecar,
+    which must stay hidden, or Spark reads the sidecar as parquet and
+    every later read of the layout fails."""
+    from vechord_spark.operators.knn import knn
+
+    r, rows = _vec_registry(spark, tmp_path, ns="mgcol")
+    centers = [[0, 0, 0, 0], [5, 5, 5, 5], [0, 5, 0, 5], [5, 0, 5, 0]]
+    sizes = [25, 25, 25, 2]
+    start = 0
+    for c, n in zip(centers, sizes):
+        r.insert_rows("emb", rows(range(start, start + n), c))
+        start += n
+    # one table file -> one build task writes every cell
+    assert r.compact("emb")["files_after"] == 1
+    r.build_vector_index("emb", lists=4)
+    assert r.merge_vector_index("emb", min_cell_factor=4.0)["merged_cells"] == 1
+    data = r._index_path("emb") / "data"
+    files = [p.name for p in data.rglob("*") if p.is_file()]
+    assert any(n.startswith("m") for n in files)  # the collision happened
+    # Spark reads every visible file of the layout as parquet
+    assert all(n.endswith(".parquet") for n in files if not n.startswith((".", "_")))
+
+    stats = r.index_stats("emb")["ivf"]
+    assert stats["rows"] == 77 and stats["lists"] == 3
+    q = [5.0, 0.0, 5.0, 0.0]
+    brute = [
+        x.uid
+        for x in knn(
+            r.load("emb"), "vec", q, k=10, distance="l2",
+            select=["uid"], tie_break="uid",
+        ).collect()
+    ]
+    got = [x.uid for x in r.search_by_vector("emb", q, topk=10, probes=3).collect()]
+    assert got == brute
 
 
 def test_prune_hardlinks_untouched_cells(spark, tmp_path):

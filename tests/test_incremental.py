@@ -223,40 +223,66 @@ def test_extend_keyword_index_requires_index(spark, tmp_path):
         r.extend_keyword_index("doc")
 
 
-def test_file_ledger_fast_path_and_fallback(reg, spark):
-    """The extend discovery is O(appended data) via the file ledger;
-    a rewrite (DELETE) invalidates the ledger and falls back to the
-    pk anti-join instead of trusting stale file history."""
-    import json
+def _scanned_files(df) -> list[str]:
+    """Run ``df`` and return the names of the files its parquet scan
+    read — the listing left after Spark's file pruning."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            dirs = node.selectedPartitions().partitionDirectories()
+            for i in range(len(dirs)):
+                files = dirs[i].files().iterator()
+                while files.hasNext():
+                    names.append(files.next().getPath().getName())
+        children = node.children().iterator()
+        while children.hasNext():
+            todo.append(children.next())
+    return sorted(names)
 
+
+def test_file_ledger_fast_path_and_fallback(reg, spark):
+    """The extend discovery is O(appended data): the layout records
+    the table version it covers, and the log names the files committed
+    since. A rewrite (DELETE) after it falls back to the pk anti-join
+    instead of trusting the added files."""
     reg.insert_rows("emb", _rows(range(50), seed=5))
     reg.build_vector_index("emb", lists=2)
     ipath = reg._index_path("emb")
-    assert (ipath / "files.json").exists()
+    assert reg._covered_version(ipath) == reg.table_version("emb")
 
+    covered = reg._covered_version(ipath)
     reg.insert_rows("emb", _rows(range(50, 60), seed=6))
-    delta, covered = reg._new_rows_since_index("emb", ipath)
+    delta, snap = reg._new_rows_since_index("emb", ipath)
     assert delta is not None and delta.count() == 10
-    # fast path reads ONLY the appended files, not the whole table
-    ledger = set(json.loads((ipath / "files.json").read_text()))
-    assert set(delta.inputFiles()).isdisjoint(ledger)
-    # the to-be-recorded set is exactly ledger + the fresh files
-    assert set(covered) == ledger | set(delta.inputFiles())
+    # the delta reads ONLY the appended commit's files and rows, and
+    # brings the layout to the latest version
+    _, added, rewritten = reg._ensure_log("emb").since(covered)
+    assert not rewritten and added
+    assert _scanned_files(delta) == sorted(added)
+    assert {r.uid for r in delta.collect()} == set(range(50, 60))
+    assert snap.version == reg.table_version("emb")
     assert reg.extend_vector_index("emb") == 10
-    # ledger refreshed: nothing new now
+    # coverage refreshed: nothing new now
+    assert reg._covered_version(ipath) == reg.table_version("emb")
     assert reg._new_rows_since_index("emb", ipath)[0].count() == 0
 
-    # a rewrite invalidates the ledger -> anti-join fallback still works
+    # a rewrite after the covered version -> anti-join fallback
     reg.remove_by("emb", {"uid": 0}, cascade=False)
-    assert reg._new_rows_since_index("emb", ipath) == (None, None)
+    delta, snap = reg._new_rows_since_index("emb", ipath)
+    assert delta is None and snap.version == reg.table_version("emb")
     reg.insert_rows("emb", _rows(range(100, 105), seed=7))
     assert reg.extend_vector_index("emb") == 5
-    # and the ledger is re-adopted afterwards
+    # and the log delta is usable again afterwards
     assert reg._new_rows_since_index("emb", ipath)[0].count() == 0
 
 
 def test_extend_intent_forces_idempotent_retry(reg, spark):
-    """A crash between the index append and the ledger record leaves an
+    """A crash between the index append and the coverage record leaves an
     intent marker; the next extend then refuses the file-diff fast path
     and retries through the idempotent anti-join (no double-append)."""
     reg.insert_rows("emb", _rows(range(40), seed=9))
@@ -284,7 +310,7 @@ def test_extend_intent_forces_idempotent_retry(reg, spark):
     ).partitionBy("centroid_id").parquet(str(ipath / "data"))
 
     # intent present -> fast path refused
-    assert reg._new_rows_since_index("emb", ipath) == (None, None)
+    assert reg._new_rows_since_index("emb", ipath)[0] is None
     # retry is a no-op (rows already indexed), and clears the intent
     assert reg.extend_vector_index("emb") == 0
     assert not (ipath / "extend.intent").exists()
@@ -293,7 +319,7 @@ def test_extend_intent_forces_idempotent_retry(reg, spark):
     assert len(ids) == len(set(ids)) == 50
     # back on the fast path afterwards
     reg.insert_rows("emb", _rows(range(100, 104), seed=11))
-    delta, covered = reg._new_rows_since_index("emb", ipath)
+    delta, _ = reg._new_rows_since_index("emb", ipath)
     assert delta is not None and delta.count() == 4
     assert reg.extend_vector_index("emb") == 4
 
@@ -344,7 +370,7 @@ def test_keyword_extend_crash_after_append_repairs_derived(spark, tmp_path):
     inc.insert_rows("doc", day2)
 
     # simulate the crash: intent marked, postings + doclen appended,
-    # derived tables NOT merged, ledger NOT recorded
+    # derived tables NOT merged, coverage NOT recorded
     ipath = inc.base_path / "kwcrash1_doc.bm25"
     old = inc._load_keyword_index("doc")
     new = inc.load("doc").join(
@@ -394,7 +420,7 @@ def test_keyword_extend_crash_before_append_retries_cleanly(spark, tmp_path):
 
 def test_compact_readopts_vector_ledger(reg, spark):
     """build -> extend -> compact -> extend: the post-compact extend
-    must use the file-ledger fast path (never the O(table) anti-join)
+    must use the log-delta fast path (never the O(table) anti-join)
     and search results must equal the uncompacted index's."""
     reg.insert_rows("emb", _rows(range(60), seed=51))
     reg.build_vector_index("emb", lists=2)
@@ -408,11 +434,9 @@ def test_compact_readopts_vector_ledger(reg, spark):
     stats = reg.compact("emb")
     assert stats["files_after"] <= stats["files_before"]
     ipath = reg._index_path("emb")
-    # ledger re-adopted: it matches the compacted file set exactly
-    import json
-
-    ledger = set(json.loads((ipath / "files.json").read_text()))
-    assert ledger == set(reg.load("emb").inputFiles())
+    # coverage re-adopted: the layout covers the compacted version
+    assert reg.history("emb")[-1]["op"] == "compact"
+    assert reg._covered_version(ipath) == reg.table_version("emb")
 
     # results identical across the compaction: the index rows never
     # changed (checked BEFORE any day-N append changes the corpus)
@@ -421,13 +445,15 @@ def test_compact_readopts_vector_ledger(reg, spark):
     ]
     assert after == before
 
-    # day-N append goes through the FAST path (ledger valid, delta
-    # reads only the fresh files), not the anti-join fallback
+    # day-N append goes through the FAST path (the delta reads only
+    # the fresh commit), not the anti-join fallback
+    compacted = reg.table_version("emb")
     reg.insert_rows("emb", _rows(range(100, 110), seed=53))
-    delta, covered = reg._new_rows_since_index("emb", ipath)
-    assert delta is not None, "ledger fast path must survive compaction"
-    assert delta.count() == 10
-    assert set(delta.inputFiles()).isdisjoint(ledger)
+    delta, _ = reg._new_rows_since_index("emb", ipath)
+    assert delta is not None, "log delta must survive compaction"
+    _, added, _ = reg._ensure_log("emb").since(compacted)
+    assert _scanned_files(delta) == sorted(added)
+    assert {r.uid for r in delta.collect()} == set(range(100, 110))
     assert reg.extend_vector_index("emb") == 10
 
 
@@ -447,7 +473,7 @@ def test_compact_extends_pending_rows_first(reg, spark):
 
 
 def test_compact_readopts_keyword_ledger(spark, tmp_path):
-    """The BM25 twin: compact -> fresh ledger -> fast-path extend with
+    """The BM25 twin: compact -> re-adopted coverage -> fast-path extend with
     rebuild-identical scores."""
     day1, day2 = _kw_docs(range(30), seed=71), _kw_docs(range(30, 45), seed=72)
     inc = _kw_registry(spark, tmp_path, "kwcomp")
@@ -467,17 +493,15 @@ def test_compact_readopts_keyword_ledger(spark, tmp_path):
 
 
 def test_zorder_readopts_vector_ledger(reg, spark):
-    """optimize_zorder rewrites files like compact — the ledger must be
-    re-adopted there too (same extend-first/snapshot-after bracket)."""
-    import json
-
+    """optimize_zorder rewrites files like compact — coverage must be
+    re-adopted there too (same extend-first/record-after bracket)."""
     reg.insert_rows("emb", _rows(range(50), seed=81))
     reg.build_vector_index("emb", lists=2)
     reg.insert_rows("emb", _rows(range(50, 60), seed=82))  # pending
     reg.optimize_zorder("emb", "uid", "uid", n_files=2)
     ipath = reg._index_path("emb")
-    ledger = set(json.loads((ipath / "files.json").read_text()))
-    assert ledger == set(reg.load("emb").inputFiles())
+    assert reg.history("emb")[-1]["op"] == "zorder"
+    assert reg._covered_version(ipath) == reg.table_version("emb")
     # pending rows were indexed by the extend-first step
     ids = [r.uid for r in spark.read.parquet(str(ipath / "data")).collect()]
     assert len(ids) == len(set(ids)) == 60
@@ -490,10 +514,8 @@ def test_zorder_readopts_vector_ledger(reg, spark):
 
 def test_compact_index_shrinks_files_and_keeps_scores(spark, tmp_path):
     """Daily extends fragment the index layouts; compact_index rewrites
-    them in place — fewer files, identical search results, table ledger
-    untouched."""
-    import json
-
+    them in place — fewer files, identical search results, covered
+    table version untouched."""
     from vechord_spark.spec import Keyword
 
     rng = random.Random(91)
@@ -540,13 +562,13 @@ def test_compact_index_shrinks_files_and_keeps_scores(spark, tmp_path):
     kpath = reg.base_path / "idxc_doc.bm25"
     files_before = sum(1 for p in (ipath / "data").rglob("*.parquet"))
     postings_before = sum(1 for p in (kpath / "postings").rglob("*.parquet"))
-    ledger_before = (ipath / "files.json").read_text()
+    covered_before = reg._covered_version(ipath)
 
     out = reg.compact_index("doc")
     assert out["ivf_data_files"] < files_before
     assert out["bm25_postings_files"] < postings_before
-    # table ledger untouched: extends keep their O(appended) fast path
-    assert (ipath / "files.json").read_text() == ledger_before
+    # coverage untouched: extends keep their O(appended) fast path
+    assert reg._covered_version(ipath) == covered_before == reg.table_version("doc")
     assert reg._new_rows_since_index("doc", ipath)[0].count() == 0
 
     knn_after = [

@@ -1,6 +1,9 @@
 """Pipeline staging + atomic publish (reference transaction semantics,
 tests/test_table.py:261-298: failure leaves no partial rows)."""
 
+import os
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,9 +27,12 @@ def reg(spark, tmp_path):
 
 
 def test_two_stage_pipeline_commits_both(reg, spark):
+    batch = {"uids": (1, 2)}
+
     def load_docs(run, _):
+        a, b = batch["uids"]
         df = spark.createDataFrame(
-            [(1, "alpha. beta"), (2, "gamma. delta")], "uid int, text string"
+            [(a, "alpha. beta"), (b, "gamma. delta")], "uid int, text string"
         )
         return run.stage("document", df)
 
@@ -44,6 +50,41 @@ def test_two_stage_pipeline_commits_both(reg, spark):
     VechordPipeline(reg, [load_docs, chunk_docs]).run()
     assert reg.load("document").count() == 2
     assert reg.load("chunk").count() == 4
+
+    # a second batch into the same tables: every row is visible, each
+    # batch is one commit per table, and vacuum deletes none of them
+    batch["uids"] = (3, 4)
+    VechordPipeline(reg, [load_docs, chunk_docs]).run()
+    for table, n in (("document", 4), ("chunk", 8)):
+        assert reg.load(table).count() == n
+        assert [e["op"] for e in reg.history(table)] == ["bootstrap", "append", "append"]
+        assert reg.vacuum(table) == []
+        assert reg.load(table).count() == n
+
+
+def test_aged_stage_survives_vacuum_before_its_commit(reg, spark, monkeypatch):
+    """A stage written long before the run commits: a vacuum in another
+    session between the move into the table and the log commit must
+    not take the moved files for old orphans."""
+    from vechord_spark.plans.commitlog import TableLog
+
+    def stage_aged(run, _):
+        df = spark.createDataFrame([(1, "a"), (2, "b")], "uid int, text string")
+        out = run.stage("document", df)
+        old = time.time() - 2 * reg.HISTORY_RETENTION_S
+        for p in run.staging_path("document").iterdir():
+            os.utime(p, (old, old))
+        return out
+
+    commit_latest = TableLog.commit_latest
+
+    def vacuum_then_commit(self, *args, **kwargs):
+        reg.vacuum("document", older_than_s=reg.HISTORY_RETENTION_S)
+        return commit_latest(self, *args, **kwargs)
+
+    monkeypatch.setattr(TableLog, "commit_latest", vacuum_then_commit)
+    VechordPipeline(reg, [stage_aged]).run()
+    assert sorted(r.uid for r in reg.load("document").collect()) == [1, 2]
 
 
 def test_failed_pipeline_leaves_no_partial_rows(reg, spark):
@@ -90,7 +131,7 @@ def test_inject_stage_fan_out(reg, spark):
     assert len(out) == 4
 
 
-def test_recover_incomplete_commit_rolls_back(reg, spark):
+def test_recover_incomplete_commit_rolls_back(reg, spark, monkeypatch):
     # simulate a process death mid-publish: manifest written, one part
     # file moved, staging still on disk -> recovery must restore the
     # pre-run table state
@@ -128,6 +169,41 @@ def test_recover_incomplete_commit_rolls_back(reg, spark):
     assert not dead._manifest_path().exists()
     rows = reg.load("document").collect()
     assert [(r.uid, r.text) for r in rows] == [(1, "keep")]
+
+    # a crash between the two tables' commits (the first table is
+    # committed, the second moved but not): recovery returns BOTH
+    # tables to their pre-run rows, the committed one through a
+    # compensating commit
+    from vechord_spark.plans.commitlog import TableLog
+
+    class Crash(BaseException):
+        """Process death: no except-Exception rollback runs."""
+
+    reg.insert_rows("chunk", [{"uid": "1-0", "doc_id": 1, "text": "keep"}])
+    dead = PipelineRun(reg)
+    dead.stage("document", spark.createDataFrame([(3, "lost")], "uid int, text string"))
+    dead.stage(
+        "chunk",
+        spark.createDataFrame([("3-0", 3, "lost")], "uid string, doc_id int, text string"),
+    )
+    real = TableLog.try_commit
+
+    def dies_on_chunk(self, version, add=(), remove=(), op="append"):
+        if self.table_dir.name.endswith("_chunk"):
+            raise Crash()
+        return real(self, version, add=add, remove=remove, op=op)
+
+    with monkeypatch.context() as m:
+        m.setattr(TableLog, "try_commit", dies_on_chunk)
+        with pytest.raises(Crash):
+            dead.commit()
+    assert reg.load("document").count() == 2  # the crash state is real
+    assert dead.run_id in recover_incomplete_runs(reg)
+    assert {(r.uid, r.text) for r in reg.load("document").collect()} == {(1, "keep")}
+    assert {r.uid for r in reg.load("chunk").collect()} == {"1-0"}
+    assert reg.history("document")[-1]["op"] == "revert"
+    assert not list(Path(reg.table_path("chunk")).glob(f"part-{dead.run_id}-*"))
+    assert recover_incomplete_runs(reg) == []
 
 
 def test_rewrite_crash_rolls_forward_from_staging(reg, spark):

@@ -809,13 +809,12 @@ def test_recluster_multivec_index(spark, tmp_path):
 def test_index_stats_drives_maintenance_decisions(spark, tmp_path):
     """index_stats reports the numbers maintenance keys on: cell skew
     rises with drifted appends and falls after the targeted recluster;
-    the ledger-freshness bit flips once files are rewritten."""
+    the ledger-freshness bit flips once a delete rewrites files, and
+    holds across a compact (which extends first and re-adopts)."""
     import random
 
     rng = random.Random(41)
-    reg = VechordRegistry(
-        "stats", str(tmp_path), spark, concurrency="optimistic"
-    )
+    reg = VechordRegistry("stats", str(tmp_path), spark)
     reg.register(
         TableSpec(
             "emb",
@@ -876,8 +875,13 @@ def test_index_stats_drives_maintenance_decisions(spark, tmp_path):
     # converged: no cell above the factor, by definition
     assert s2["ivf"]["skew"] <= 1.5
 
-    # a compact rewrites table files -> the ivf ledger goes stale too
+    # a compact extends every index first and re-adopts coverage on
+    # the compacted version; a delete rewrites table files -> stale
     reg.compact("emb", target_file_bytes=1 << 30)
+    s3 = reg.index_stats("emb")
+    assert s3["ivf"]["ledger_fresh"] and s3["bm25"]["ledger_fresh"]
+    assert s3["ivf"]["files_behind"] == s3["bm25"]["files_behind"] == 0
+    reg.remove_by("emb", {"uid": 0})
     assert reg.index_stats("emb")["ivf"]["ledger_fresh"] is False
 
 

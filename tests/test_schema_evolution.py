@@ -71,7 +71,7 @@ def test_alter_overlay_replays_in_new_session(spark, tmp_path):
 
 
 def test_backfill_column_rewrites_once(spark, tmp_path):
-    r = VechordRegistry("evo3", str(tmp_path), spark, concurrency="optimistic")
+    r = VechordRegistry("evo3", str(tmp_path), spark)
     r.register(_spec())
     r.insert_rows("doc", _rows(0, 4))
     r.alter_table_add_column("doc", "lang", "string")
@@ -219,15 +219,15 @@ def test_backfill_stales_ledgers_and_maintain_heals(spark, tmp_path):
 
 
 def test_alter_overlay_survives_table_rewrite(spark, tmp_path):
-    """_alters.json lives inside the table dir, and the non-optimistic
-    rewrite path (backfill/DELETE) swaps the WHOLE dir: the overlay
-    must ride into the staging copy, or a fresh session would replay
-    nothing and silently serve the pre-alter schema."""
+    """_alters.json lives inside the table dir, and a rewrite
+    (backfill/DELETE) replaces every data file of it: the overlay must
+    survive, or a fresh session would replay nothing and silently
+    serve the pre-alter schema."""
     r = VechordRegistry("evo8", str(tmp_path), spark)
     r.register(_spec())
     r.insert_rows("doc", _rows(0, 4))
     r.alter_table_add_column("doc", "lang", "string", insert_default="en")
-    r.backfill_column("doc", "lang", "fr")  # full rewrite, dir swap
+    r.backfill_column("doc", "lang", "fr")  # full rewrite
     r.remove_by("doc", {"uid": 0})  # second rewrite flavor
 
     r2 = VechordRegistry("evo8", str(tmp_path), spark)

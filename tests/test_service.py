@@ -71,6 +71,38 @@ def test_table_validation_errors(svc):
     assert svc.handle("POST", "/api/table/document", body=b"not json")[0] == 422
 
 
+def test_conflicts_are_409_and_faults_are_logged(svc, monkeypatch, caplog):
+    """A duplicate primary key and a lost commit race are conflicts with
+    the stored state (409), not faults; a fault is a 500 whose
+    traceback is logged while the client body stays the short text."""
+    import logging
+
+    from vechord_spark.plans.commitlog import CommitConflict
+
+    row = json.dumps([{"uid": 1, "title": "alpha", "score": 0.5}]).encode()
+    assert svc.handle("POST", "/api/table/document", body=row)[0] == 201
+    status, _, body = svc.handle("POST", "/api/table/document", body=row)
+    assert status == 409 and b"duplicate uid" in body
+
+    def lose(*_a, **_k):
+        raise CommitConflict("append to document lost 12 version races")
+
+    monkeypatch.setattr(svc.registry, "insert_rows", lose)
+    row2 = json.dumps([{"uid": 2, "title": "beta", "score": 0.1}]).encode()
+    assert svc.handle("POST", "/api/table/document", body=row2)[0] == 409
+
+    def fault(*_a, **_k):
+        raise RuntimeError("disk on fire")
+
+    monkeypatch.setattr(svc.registry, "insert_rows", fault)
+    with caplog.at_level(logging.ERROR, logger="vechord_spark.service"):
+        status, _, body = svc.handle("POST", "/api/table/document", body=row2)
+    assert (status, body) == (500, b"RuntimeError: disk on fire")
+    [rec] = [r for r in caplog.records if r.name == "vechord_spark.service"]
+    assert rec.levelno == logging.ERROR and "POST /api/table/document" in rec.getMessage()
+    assert rec.exc_info and rec.exc_info[0] is RuntimeError
+
+
 def test_openapi_spec_lists_tables(svc):
     status, _, body = _get(svc, "/openapi/spec.json")
     spec = _json(body)
@@ -222,7 +254,7 @@ def test_cli_history_and_vacuum(spark, tmp_path, capsys):
     from vechord_spark.registry import VechordRegistry
     from vechord_spark.spec import Column, TableSpec
 
-    reg = VechordRegistry("cli", str(tmp_path), spark, concurrency="optimistic")
+    reg = VechordRegistry("cli", str(tmp_path), spark)
     reg.register(TableSpec("t", [Column("uid", "int"), Column("x", "string")]))
     reg.insert_rows("t", [{"uid": 1, "x": "a"}, {"uid": 2, "x": "b"}])
     reg.remove_by("t", {"uid": 1})
@@ -242,7 +274,7 @@ def test_cli_history_and_vacuum(spark, tmp_path, capsys):
     assert out["n"] >= 1  # the pre-delete files were reclaimed
     assert reg.load("t").count() == 1
 
-    # no commit log -> exit 2 (single-writer tables keep no manifest)
+    # no commit log -> exit 2 (the table was never written)
     assert main(["history", "--base-path", str(tmp_path), "--namespace", "cli", "nope"]) == 2
 
 
@@ -491,7 +523,7 @@ def test_maintenance_endpoint(spark, tmp_path):
     from vechord_spark.spec import Column, TableSpec, Vector
 
     rng = random.Random(17)
-    reg = VechordRegistry("svc_m", str(tmp_path), spark, concurrency="optimistic")
+    reg = VechordRegistry("svc_m", str(tmp_path), spark)
     reg.register(
         TableSpec(
             "emb",

@@ -142,7 +142,7 @@ def test_sparse_search_prefilter_conditions(spark, tmp_path):
 
 
 def test_sparse_extend_crash_is_idempotent(spark, tmp_path, monkeypatch):
-    """A crash between the postings append and the ledger record
+    """A crash between the postings append and the coverage record
     leaves extend.intent behind; the retry must go through the
     anti-join path and append NOTHING twice (postings already carry
     the delta's pk)."""
@@ -154,29 +154,29 @@ def test_sparse_extend_crash_is_idempotent(spark, tmp_path, monkeypatch):
         [{"uid": 9, "title": "z", "sv": {"indices": [7], "values": [10.0]}}],
     )
 
-    real = VechordRegistry._record_index_files
+    real = VechordRegistry._record_coverage
     state = {"boom": True}
 
-    def crashing(self, name, ipath, files):
+    def crashing(self, ipath, version):
         if state["boom"] and ipath.name.endswith(".sparse"):
             state["boom"] = False
             raise RuntimeError("simulated crash after postings append")
-        return real(self, name, ipath, files)
+        return real(self, ipath, version)
 
-    monkeypatch.setattr(VechordRegistry, "_record_index_files", crashing)
+    monkeypatch.setattr(VechordRegistry, "_record_coverage", crashing)
     with pytest.raises(RuntimeError, match="simulated crash"):
         r.extend_sparse_index("doc")
     ipath = r._sparse_index_path("doc")
     assert (ipath / "extend.intent").exists()
 
-    # retry: anti-join path (intent blocks the file-diff fast path),
+    # retry: anti-join path (intent blocks the log-delta fast path),
     # finds nothing new — uid 9's postings already landed
     assert r.extend_sparse_index("doc") == 0
     posts = spark.read.parquet(str(ipath / "postings"))
     assert posts.filter("uid = 9").count() == 1  # exactly once
     hits = r.search_by_sparse("doc", {7: 1.0}, topk=1).collect()
     assert hits[0]["uid"] == 9 and hits[0]["score"] == 10.0
-    # ledger re-adopted by the successful retry
+    # coverage re-adopted by the successful retry
     assert r.index_stats("doc")["sparse"]["ledger_fresh"]
 
 

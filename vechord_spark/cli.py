@@ -238,8 +238,8 @@ def main(argv: list[str] | None = None) -> int:
         log = TableLog(table_dir)
         if not log.exists():
             print(
-                f"no commit log at {table_dir} (table absent, or written "
-                "single-writer — only concurrency='optimistic' tables keep one)",
+                f"no commit log at {table_dir} (table absent, or not written "
+                "since it was created by an older version)",
                 file=sys.stderr,
             )
             return 2

@@ -43,5 +43,5 @@ class MaintenanceBusy(VechordError):
     duration. Contenders fail fast with this error instead of
     deadlocking; compact()'s bring-current pre-step treats it as
     "someone else is maintaining this index" and safely skips (the
-    next extend re-adopts the ledger via the anti-join).
+    next extend re-adopts coverage via the anti-join).
     """

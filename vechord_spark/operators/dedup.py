@@ -221,7 +221,7 @@ def minhash_candidate_pairs_cross(
     ``seen_bands`` is the PERSISTED signature table of the seen corpus
     (``minhash_bands`` output, written once at curation time and
     appended as waves land — the incremental twin of the postings/IVF
-    file ledgers in registry extend_*). The new batch is banded fresh
+    log-delta extends in registry extend_*). The new batch is banded fresh
     (one scan of the new docs), self-joined for within-batch pairs, and
     joined against the seen bands for cross pairs. The band/sig keys
     are identical on both sides by construction, so the union of the

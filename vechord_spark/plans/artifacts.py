@@ -2,8 +2,8 @@
 later session, rebuild only when the source data (or build params)
 change.
 
-This is the suite-side twin of the registry's index ledgers
-(registry.py:_record_index_files): an artifact directory carries a
+This is the suite-side twin of the registry's index coverage records
+(registry.py:_record_coverage): an artifact directory carries a
 ``meta.json`` recording the exact source-file set (path, size,
 mtime_ns) plus the build parameters, and ``is_valid`` accepts the
 layout only when both still match. The write is atomic — the build

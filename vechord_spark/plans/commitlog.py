@@ -1,4 +1,4 @@
-"""Optimistic-concurrency commit log for registry tables.
+"""The commit log every registry table is written through.
 
 The reference engine gets multi-writer safety for free from PostgreSQL
 — MVCC snapshots, sequences, unique indexes (vechord/registry.py binds
@@ -18,17 +18,20 @@ supplies the coordination layer the way Delta Lake / Iceberg do:
   HARD-LINKING it into the next version slot. ``link(2)`` is atomic and
   fails with ``EEXIST`` if the slot is taken, so exactly one writer
   wins each version; losers re-validate against the delta and retry.
-  (Spark's underscore convention hides ``_log`` from directory scans,
-  so legacy whole-directory reads of the same table keep working.)
+  (Spark's underscore convention hides ``_log`` from directory scans.)
 
-Because a rewrite (DELETE / compaction) is now ONE atomic commit that
-adds the survivor files and removes the old ones, there is no publish
-window at all — strictly stronger than the rename-based intent journal
-in ``VechordRegistry._rewrite`` (kept for single-writer tables).
+Every write of ``VechordRegistry`` — append, upsert, delete, cascade,
+backfill, compaction and pipeline publish — is one commit here, so a
+rewrite (DELETE / compaction) is ONE atomic commit that adds the
+survivor files and removes the old ones: there is no publish window.
+Index layouts record the table version they cover; :meth:`TableLog.since`
+names the files added after it, which is what an incremental extend
+reads.
 
 Old files stay on disk until :meth:`TableLog.vacuum`, which is what
 makes ``snapshot(version=...)`` time travel work — again the Delta
-semantics: vacuum trades history for space.
+semantics: vacuum trades history for space. The registry vacuums at a
+fixed retention after every rewrite commit and in ``maintain()``.
 """
 
 from __future__ import annotations
@@ -42,6 +45,8 @@ from typing import Iterable, Sequence
 
 LOG_DIR = "_log"
 _ENTRY_WIDTH = 8
+# version races a writer may lose before its commit raises CommitConflict
+MAX_COMMIT_RETRIES = 12
 
 
 class CommitConflict(Exception):
@@ -99,11 +104,27 @@ class TableLog:
         thousand small JSON files while the data spans millions of
         parquet files the reader never has to list.
         """
+        return self._replay(upto=version)[0]
+
+    def since(self, version: int) -> tuple[Snapshot, list[str], bool]:
+        """``(latest, added, rewritten)``: the latest snapshot, the files
+        added after ``version`` in commit order, and whether the added
+        files may hold more than new rows — an entry after ``version``
+        removed files (a rewrite), or ``version`` is not in the log.
+        One pass over the log."""
+        return self._replay(after=version)
+
+    def _replay(
+        self, upto: int | None = None, after: int | None = None
+    ) -> tuple[Snapshot, list[str], bool]:
+        """The one fold over the log: the snapshot at ``upto`` (default:
+        latest) and, for ``after``, the files added after that version
+        and whether an entry after it removed files (see :meth:`since`)."""
         live: dict[str, None] = {}  # insertion-ordered set
-        latest = -1
+        latest, added, removed = -1, [], False
         for p in self._entry_paths():
             v = int(p.stem)
-            if version is not None and v > version:
+            if upto is not None and v > upto:
                 break
             latest = v
             entry = json.loads(p.read_text())
@@ -111,11 +132,13 @@ class TableLog:
                 live.pop(f, None)
             for f in entry.get("add", ()):
                 live[f] = None
-        if version is not None and latest < version:
-            raise ValueError(
-                f"version {version} not committed (latest is {latest})"
-            )
-        return Snapshot(version=latest, files=tuple(live))
+            if after is not None and v > after:
+                removed = removed or bool(entry.get("remove"))
+                added.extend(entry.get("add", ()))
+        if upto is not None and latest < upto:
+            raise ValueError(f"version {upto} not committed (latest is {latest})")
+        rewritten = after is not None and (removed or not -1 <= after <= latest)
+        return Snapshot(version=latest, files=tuple(live)), added, rewritten
 
     # --------------------------------------------------------------- commit
     def try_commit(
@@ -146,6 +169,25 @@ class TableLog:
         finally:
             tmp.unlink(missing_ok=True)
         return True
+
+    def commit_latest(
+        self,
+        add: Sequence[str] = (),
+        remove: Sequence[str] = (),
+        op: str = "append",
+    ) -> int:
+        """Commit file actions that do not depend on the snapshot they
+        land on (publishing staged files, removing known files) at the
+        next free version, retrying lost races; returns the version.
+        Raises :class:`CommitConflict` after
+        :data:`MAX_COMMIT_RETRIES` lost races."""
+        for _ in range(MAX_COMMIT_RETRIES):
+            version = self.current_version() + 1
+            if self.try_commit(version, add=add, remove=remove, op=op):
+                return version
+        raise CommitConflict(
+            f"{op} on {self.table_dir.name} lost {MAX_COMMIT_RETRIES} version races"
+        )
 
     def bootstrap(self, data_files: Iterable[str]) -> Snapshot:
         """Adopt a legacy (directory-listed) table as version 0.

@@ -14,9 +14,11 @@ What remains is atomic multi-table publish:
 2. Stage outputs destined for tables are written to a staging dir
    ``{table}/.staging/{run_id}`` (real files, so downstream stages can
    re-read if they want, and nothing is recomputed twice).
-3. ``commit`` moves every staged directory's files into the live table
-   path; failure anywhere discards all staging. Parquet-level
-   rename-publish — Delta's multi-table txn is the drop-in upgrade.
+3. ``commit`` moves every staged directory's files into its table
+   directory and commits them through the table's manifest log
+   (plans/commitlog.py), one table after another; failure anywhere
+   discards all staging and reverts the tables already committed with
+   a compensating commit.
 
 The ``inject``-style stage wrapper (reference vechord/registry.py:353-442)
 maps a Python row function over an input table via mapInPandas.
@@ -24,6 +26,7 @@ maps a Python row function over an input table via mapInPandas.
 
 from __future__ import annotations
 
+import os
 import shutil
 import uuid
 from dataclasses import dataclass, field
@@ -33,6 +36,7 @@ from typing import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from vechord_spark.plans.commitlog import TableLog
 from vechord_spark.registry import VechordRegistry
 
 
@@ -68,46 +72,49 @@ class PipelineRun:
         return Path(self.registry.base_path) / ".staging" / self.run_id / "COMMIT.json"
 
     def commit(self) -> None:
-        """Publish every staged output into its live table directory.
+        """Publish every staged output into its table.
 
-        File-move publish: parquet part files are renamed (same
-        filesystem) with run-id-unique names, so a reader never sees a
-        half-written file. On any error, abort() removes both staged
-        and already-moved files of this run (files are identifiable by
-        the run_id prefix) — all-or-nothing like the reference's
-        transaction rollback (tests/test_table.py:261-298).
+        Each table's staged part files move into its directory under
+        run-id-unique names, then one log commit per table makes them
+        visible, so a reader sees a table's batch whole or not at all.
+        On any error, every table this run already committed is
+        reverted by a compensating commit that removes its files, and
+        its uncommitted files are deleted — all-or-nothing like the
+        reference's transaction rollback (tests/test_table.py:261-298).
 
         Crash safety: the full target list is journaled to COMMIT.json
-        BEFORE any file moves and deleted only after the last move, so
-        a process death mid-publish leaves a manifest naming exactly
-        the files that may be half-published;
-        ``recover_incomplete_runs`` rolls such runs back to the pre-run
-        state. A manifest-free crash state needs no recovery.
+        BEFORE any file moves and deleted only after the last commit,
+        so a process death mid-publish leaves a manifest naming exactly
+        the files that may be published; ``recover_incomplete_runs``
+        rolls such runs back to the pre-run state the same way. A
+        manifest-free crash state needs no recovery.
         """
         import json
 
-        plan: list[tuple[str, Path, Path]] = []
+        plan: dict[str, list[tuple[Path, Path]]] = {}
         for table, path in self._staged:
             live = Path(self.registry.table_path(table))
-            for i, part in enumerate(sorted(path.glob("part-*"))):
-                target = live / f"part-{self.run_id}-{i}{''.join(part.suffixes)}"
-                plan.append((table, part, target))
+            plan[table] = [
+                (part, live / f"part-{self.run_id}-{i}{''.join(part.suffixes)}")
+                for i, part in enumerate(sorted(path.glob("part-*")))
+            ]
+        targets = [target for moves in plan.values() for _, target in moves]
         manifest = self._manifest_path()
         manifest.parent.mkdir(parents=True, exist_ok=True)
         manifest.write_text(
-            json.dumps(
-                {"run_id": self.run_id, "targets": [str(t) for _, _, t in plan]}
-            )
+            json.dumps({"run_id": self.run_id, "targets": [str(t) for t in targets]})
         )
-        moved: list[Path] = []
         try:
-            for table, part, target in plan:
-                target.parent.mkdir(parents=True, exist_ok=True)
-                shutil.move(str(part), str(target))
-                moved.append(target)
+            for table, moves in plan.items():
+                log = self.registry._ensure_log(table)
+                for part, target in moves:
+                    shutil.move(str(part), str(target))
+                    # a move keeps the stage's write time: restart the
+                    # vacuum age so a concurrent vacuum keeps the file
+                    os.utime(target)
+                log.commit_latest(add=[target.name for _, target in moves])
         except Exception:
-            for m in moved:
-                m.unlink(missing_ok=True)
+            _revert(targets)
             self.abort()
             raise
         manifest.unlink(missing_ok=True)
@@ -115,11 +122,6 @@ class PipelineRun:
 
     def abort(self) -> None:
         """Discard all staged output (rollback)."""
-        for table, _ in self._staged:
-            live = Path(self.registry.table_path(table))
-            if live.exists():
-                for leaked in live.glob(f"part-{self.run_id}-*"):
-                    leaked.unlink(missing_ok=True)
         self._cleanup()
 
     def _cleanup(self) -> None:
@@ -129,14 +131,33 @@ class PipelineRun:
         self._staged.clear()
 
 
+def _revert(targets: Sequence[Path]) -> None:
+    """Return the tables holding ``targets`` (part files one run
+    published) to their state before that run: the committed ones
+    leave their table in one compensating ``revert`` commit (the files
+    stay for time travel until ``vacuum``), the others are deleted."""
+    by_table: dict[Path, list[Path]] = {}
+    for target in targets:
+        by_table.setdefault(target.parent, []).append(target)
+    for table_dir, files in by_table.items():
+        log = TableLog(table_dir)
+        live = set(log.snapshot().files) & {f.name for f in files}
+        if live:
+            log.commit_latest(remove=sorted(live), op="revert")
+        for f in files:
+            if f.name not in live:
+                f.unlink(missing_ok=True)
+
+
 def recover_incomplete_runs(registry: VechordRegistry) -> list[str]:
     """Roll back pipeline runs that died mid-publish.
 
     Scans staging for leftover COMMIT.json manifests (a completed
-    commit deletes its manifest as the last step); for each, removes
-    any target part files the dead run managed to publish and sweeps
-    its staging dir — tables return to their pre-run state, matching
-    abort() semantics. Returns the recovered run ids.
+    commit deletes its manifest as the last step); for each, reverts
+    the target part files the dead run published (:func:`_revert`: a
+    compensating commit for the committed ones, deletion for the rest)
+    and sweeps its staging dir — tables return to their pre-run state,
+    matching abort() semantics. Returns the recovered run ids.
     """
     import json
 
@@ -147,8 +168,7 @@ def recover_incomplete_runs(registry: VechordRegistry) -> list[str]:
             info = json.loads(manifest.read_text())
         except (OSError, ValueError):
             continue
-        for target in info.get("targets", []):
-            Path(target).unlink(missing_ok=True)
+        _revert([Path(t) for t in info.get("targets", [])])
         shutil.rmtree(manifest.parent, ignore_errors=True)
         recovered.append(info.get("run_id", manifest.parent.name))
     return recovered

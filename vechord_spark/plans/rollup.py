@@ -58,8 +58,8 @@ def write_rollup(
     directory is delete-then-write — a reader racing the rebuild can
     see a partial table. Single-writer refresh (the scheduled-job
     norm for summary tables) is safe; for concurrent readers put the
-    rollup under a registry table with ``concurrency="optimistic"``
-    (plans/commitlog.py) so the rebuild is one atomic snapshot swap.
+    rollup under a registry table (every registry write is a commit
+    of plans/commitlog.py) so the rebuild is one atomic snapshot swap.
     """
     if not dims:
         raise ValueError("rollup needs at least one dimension")
@@ -94,8 +94,8 @@ def merge_rollup(
     is mergeable: counts and sums add, min/max combine — the refresh
     never re-reads old facts, so a day's update costs one scan of the
     day's data (plus the rollup-sized merge). The caller supplies the
-    APPENDED facts only (pair with the registry's file-ledger pattern
-    or a commitlog snapshot diff); feeding already-rolled rows double
+    APPENDED facts only (pair with the files a commitlog names since
+    a recorded version, ``TableLog.since``); feeding already-rolled rows double
     counts, exactly like any summary table.
 
     ``dims``/``aggs`` must match the build (validated against the

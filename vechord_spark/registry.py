@@ -11,8 +11,10 @@ Design notes for scale:
 
 - ``select`` builds a declarative plan (filter + project + limit) so
   Catalyst pushes predicates and prunes columns down to the parquet scan.
-- ``delete`` is a filtered rewrite (Parquet has no in-place delete); at
-  cluster scale the same API maps to Delta ``DELETE WHERE``.
+- Every write is one commit of the table's manifest log
+  (:mod:`vechord_spark.plans.commitlog`): readers see a snapshot, and
+  ``delete`` is a filtered rewrite committed atomically (Parquet has no
+  in-place delete) — the Delta ``DELETE WHERE`` shape.
 - FK cascade (reference vechord/spec.py:135-180, ON DELETE CASCADE) is an
   explicit left-anti join of each child table against surviving parent
   keys — a broadcast join when the parent key set is small.
@@ -23,6 +25,7 @@ Design notes for scale:
 from __future__ import annotations
 
 import contextlib
+import os
 import shutil
 from functools import reduce
 
@@ -38,6 +41,12 @@ from vechord_spark.errors import (
     SchemaError,
     TableNotFound,
     UniqueViolation,
+)
+from vechord_spark.plans.commitlog import (
+    MAX_COMMIT_RETRIES,
+    CommitConflict,
+    Snapshot,
+    TableLog,
 )
 from vechord_spark.spec import AnyOf, Column, TableSpec
 
@@ -95,34 +104,22 @@ class VechordRegistry:
     (vechord/registry.py:64-101); namespace switching for multi-tenancy
     (vechord/client.py:40-51) is just constructing another registry.
 
-    ``concurrency`` selects the writer protocol:
-
-    - ``"single"`` (default): raw parquet directory appends; one writer
-      per table (the documented contract — cheapest, no log).
-    - ``"optimistic"``: every write goes through a per-table manifest
-      commit log (:mod:`vechord_spark.plans.commitlog`) with atomic
-      version claims — concurrent appenders both land, unique checks
-      and serial-id seeding re-validate against the winner's delta on
-      conflict, DELETE/compact become single-commit atomic rewrites,
-      and readers get snapshot isolation plus ``load(name, version=)``
-      time travel. This is the capability the reference inherits from
-      Postgres MVCC/sequences (vechord/registry.py:64-101) and a lake
-      gets from Delta/Iceberg.
+    Every write goes through the table's manifest commit log
+    (:mod:`vechord_spark.plans.commitlog`) with atomic version claims:
+    concurrent appenders both land, unique checks and serial-id
+    seeding re-validate against the winner's delta on conflict,
+    DELETE/compact are single-commit atomic rewrites, and readers get
+    snapshot isolation plus ``load(name, version=)`` time travel. This
+    is the capability the reference inherits from Postgres
+    MVCC/sequences (vechord/registry.py:64-101) and a lake gets from
+    Delta/Iceberg. Table directories written without a log are adopted
+    as version 0 on first use.
     """
 
-    def __init__(
-        self,
-        namespace: str,
-        base_path: str,
-        spark: SparkSession,
-        concurrency: str = "single",
-    ) -> None:
-        if concurrency not in ("single", "optimistic"):
-            raise ValueError(f"unknown concurrency mode {concurrency!r}")
+    def __init__(self, namespace: str, base_path: str, spark: SparkSession) -> None:
         self.namespace = namespace
         self.base_path = Path(base_path)
         self.spark = spark
-        self.concurrency = concurrency
         self.tables: dict[str, TableSpec] = {}
         # (table, column) -> INSERT-time default for ALTER-added columns
         self._column_defaults: dict[tuple[str, str], Any] = {}
@@ -256,7 +253,7 @@ class VechordRegistry:
         after the alter carry real values (``insert_default`` fills
         rows that omit the key — a column default, applied at INSERT
         time only, never rewriting history). To materialize a value
-        into existing rows, run :meth:`backfill_column` (one journaled
+        into existing rows, run :meth:`backfill_column` (one committed
         rewrite). The alter persists in the table's ``_alters.json``
         overlay and replays in every later session's :meth:`register`.
 
@@ -291,7 +288,7 @@ class VechordRegistry:
 
     def backfill_column(self, name: str, column: str, value) -> int:
         """Materialize ``value`` into every existing NULL of an added
-        column — the explicit, journaled rewrite
+        column — the explicit, committed rewrite
         :meth:`alter_table_add_column` deliberately does not do.
         Returns the number of rows filled."""
         spec = self._spec(name)
@@ -307,12 +304,7 @@ class VechordRegistry:
                 column, F.coalesce(F.col(column), F.lit(value))
             )
 
-        if self.concurrency == "optimistic":
-            self._optimistic_rewrite(name, build, op="backfill")
-            return filled[0]
-        out = build(self.load(name))
-        if out is not None:
-            self._rewrite(name, out)
+        self._commit_rewrite(name, build, op="backfill")
         return filled[0]
 
     def _spec(self, name: str) -> TableSpec:
@@ -347,50 +339,38 @@ class VechordRegistry:
 
     # ----------------------------------------------------------------- read
     def load(self, name: str, version: int | None = None) -> DataFrame:
-        """Read ``name`` as a DataFrame.
-
-        Tables with a commit log (written under ``concurrency=
-        "optimistic"``) read the manifest SNAPSHOT — exactly the files
-        the latest commit references, so a concurrent writer's staged
-        files are invisible until its commit lands. ``version`` time-
-        travels to an earlier snapshot (valid until ``vacuum`` reclaims
-        its files). Log-less tables read the directory as before.
-        """
-        from vechord_spark.plans.commitlog import TableLog
-
+        """Read ``name`` as a DataFrame: the files of the latest commit
+        of its log (a concurrent writer's staged files stay invisible
+        until its commit lands), or of ``version`` — time travel, valid
+        until ``vacuum`` reclaims that version's files. A table never
+        written reads as an empty DataFrame."""
         spec = self._spec(name)
-        path = Path(self.table_path(name))
-        log = TableLog(path)
-        if log.exists() or (self.concurrency == "optimistic" and path.exists()):
-            snap = self._ensure_log(name).snapshot(version)
-            return self._read_snapshot(name, snap)
-        if version is not None:
-            raise ValueError(
-                f"load(version=) needs a commit log; {name} has none "
-                "(write it through a concurrency='optimistic' registry)"
-            )
-        if not path.exists():
-            # a missing live dir is only legitimate for a never-written
-            # table; if a rewrite intent references it, the process died
-            # inside the publish window — recover instead of silently
-            # serving an empty table
-            self._recover_rewrite(name)
-        if not path.exists():
+        if not self._table_exists(name):
+            if version is not None:
+                raise ValueError(f"version {version} not committed ({name} is empty)")
             return self.spark.createDataFrame([], spec.struct_type())
-        return self.spark.read.schema(spec.struct_type()).parquet(str(path))
+        return self._read_files(name, self._ensure_log(name).snapshot(version).files)
 
-    # ---------------------------------------------- optimistic-commit layer
+    def _table_exists(self, name: str) -> bool:
+        """Whether ``name`` has a table directory. A rewrite by older
+        code left it missing if it crashed inside its publish window;
+        that state is recovered first (:meth:`_recover_rewrite`), so a
+        table is never silently served empty."""
+        path = Path(self.table_path(name))
+        if not path.exists():
+            self._recover_rewrite(name)
+        return path.exists()
+
+    # --------------------------------------------------------- commit layer
     def _ensure_log(self, name: str):
         """The table's commit log, bootstrapping legacy directories:
         pre-log parquet files are adopted as version 0 through the same
         atomic commit every writer uses, so racing bootstrappers agree."""
-        from vechord_spark.plans.commitlog import TableLog
-
         table_dir = Path(self.table_path(name))
         log = TableLog(table_dir)
         if not log.exists():
             files = []
-            if table_dir.exists():
+            if self._table_exists(name):
                 files = [
                     str(p.relative_to(table_dir))
                     for p in table_dir.rglob("*.parquet")
@@ -404,13 +384,33 @@ class VechordRegistry:
             log.bootstrap(files)
         return log
 
-    def _read_snapshot(self, name: str, snap) -> DataFrame:
+    def _read_files(self, name: str, files: Sequence[str]) -> DataFrame:
+        """The rows of the given committed files of ``name``, planned
+        with no Spark job at any file count. Spark lists more than
+        ``parallelPartitionDiscovery.threshold`` explicit paths with a
+        distributed job, but one directory path on the driver, so the
+        table directory is read and, when it also holds files outside
+        ``files`` (removed but not yet vacuumed, or staged by a writer
+        whose commit has not landed), narrowed by file name — a filter
+        Spark applies to the file listing, so the other files are not
+        opened. A committed file that is gone (vacuumed history)
+        raises instead of reading as missing rows."""
         spec = self._spec(name)
-        if not snap.files:
+        if not files:
             return self.spark.createDataFrame([], spec.struct_type())
-        base = Path(self.table_path(name))
-        paths = [str(base / f) for f in snap.files]
-        return self.spark.read.schema(spec.struct_type()).parquet(*paths)
+        whole = self.spark.read.schema(spec.struct_type()).parquet(
+            self.table_path(name)
+        )
+        listed = {u.rsplit("/", 1)[-1] for u in whole.inputFiles()}
+        wanted = {f.rsplit("/", 1)[-1] for f in files}
+        if not wanted <= listed:
+            raise FileNotFoundError(
+                f"{name}: committed files {sorted(wanted - listed)[:3]} are "
+                "gone (vacuumed?)"
+            )
+        if wanted == listed:
+            return whole
+        return whole.filter(F.col("_metadata.file_name").isin(sorted(wanted)))
 
     def _stage_data_files(self, name: str, df: DataFrame) -> list[str]:
         """Write ``df`` executor-side and move its part files into the
@@ -429,6 +429,8 @@ class VechordRegistry:
         for i, p in enumerate(sorted(tmp.glob("*.parquet"))):
             new_name = f"part-{run}-{i:05d}.parquet"
             p.rename(table_dir / new_name)
+            # a rename keeps the write time: restart the vacuum age
+            os.utime(table_dir / new_name)
             names.append(new_name)
         shutil.rmtree(tmp, ignore_errors=True)
         return names
@@ -440,16 +442,12 @@ class VechordRegistry:
 
     def table_version(self, name: str) -> int:
         """Latest committed version (-1 if the table has no log)."""
-        from vechord_spark.plans.commitlog import TableLog
-
         self._spec(name)
         return TableLog(Path(self.table_path(name))).current_version()
 
     def history(self, name: str) -> list[dict]:
         """The table's commit entries in version order (op + file
         actions) — the observability surface of the manifest log."""
-        from vechord_spark.plans.commitlog import TableLog
-
         self._spec(name)
         return TableLog(Path(self.table_path(name))).entries()
 
@@ -457,8 +455,6 @@ class VechordRegistry:
         """Reclaim data files the current snapshot no longer references
         (rewrite history + crashed writers' orphans). Time travel only
         reaches versions whose files survive vacuum — Delta semantics."""
-        from vechord_spark.plans.commitlog import TableLog
-
         self._spec(name)
         log = TableLog(Path(self.table_path(name)))
         if not log.exists():
@@ -466,10 +462,13 @@ class VechordRegistry:
         return log.vacuum(older_than_s)
 
     def _recover_rewrite(self, name: str) -> bool:
-        """Roll a crashed ``_rewrite`` forward or back from its intent
-        journal. Forward when the staged survivors still exist (finish
-        the publish), back when only the trash copy does (restore the
-        old table). Returns True if a recovery happened."""
+        """Legacy crash recovery: older code rewrote a table by renaming
+        its directory away and a staged copy in, journaled in
+        ``.staging/rewrite-*/INTENT.json``, so a crash between the two
+        renames left the table directory missing. Roll such a rewrite
+        forward when the staged survivors still exist, back when only
+        the ``.trash`` copy does. Runs only where the table directory
+        is missing; returns True if a recovery happened."""
         import json
 
         live = Path(self.table_path(name))
@@ -509,28 +508,62 @@ class VechordRegistry:
         a collision raises :class:`UniqueViolation` like the reference
         (tests/test_table.py:142-151).
 
-        Concurrency contract depends on the registry mode:
-
-        - ``"single"`` (default): auto-increment ids seed from the
-          current ``max(id)`` and unique checks probe the pre-append
-          snapshot, so two concurrent appends can both pass and collide
-          — run ingest jobs per-table serialized (the reference gets
-          this from Postgres sequences/unique indexes).
-        - ``"optimistic"``: the append stages its files, then claims the
-          next manifest version atomically; a loser re-seeds serial ids
-          / re-checks uniques against the winner's delta and retries,
-          so concurrent appends serialize correctly without locks.
+        The batch is staged, then commits by claiming the next log
+        version atomically. The staged files derive from the snapshot
+        read at staging time, so a writer that loses the version race
+        re-seeds serial ids (restaging from the new max) or re-probes
+        unique columns against only the winner's DELTA files, then
+        retries: concurrent appends serialize correctly without locks.
+        A plain append just retries the claim with the same files.
         """
         spec = self._spec(name)
-        if self.concurrency == "optimistic":
-            return self._optimistic_append(name, df, check_unique)
-        prepared = self._prepare_batch(spec, df, self.load(name))
+        ai = spec.auto_increment_column
+        generates_ids = ai is not None and ai.name not in df.columns
         uniques = spec.unique_columns() if check_unique else []
-        if uniques:
-            self._check_unique(name, prepared, self.load(name), uniques)
-        n = prepared.count()
-        prepared.write.mode("append").parquet(self.table_path(name))
-        return n
+        log = self._ensure_log(name)
+        staged: list[str] | None = None
+        base_version = -1
+        n = 0
+        for _ in range(MAX_COMMIT_RETRIES):
+            snap = log.snapshot()
+            if staged is None:
+                existing = self._read_files(name, snap.files)
+                prepared = self._prepare_batch(spec, df, existing)
+                if uniques:
+                    self._check_unique(name, prepared, existing, uniques)
+                n = prepared.count()
+                staged = self._stage_data_files(name, prepared)
+                base_version = snap.version
+            elif snap.version != base_version:
+                if generates_ids:
+                    # ids were seeded from a stale max — restage
+                    self._discard_staged(name, staged)
+                    staged = None
+                    continue
+                if uniques:
+                    _, delta_files, rewritten = log.since(base_version)
+                    if rewritten:  # a rewrite landed: re-probe all
+                        delta_files = list(snap.files)
+                    if delta_files:
+                        try:
+                            self._check_unique(
+                                name,
+                                prepared,
+                                self._read_files(name, delta_files),
+                                uniques,
+                                check_batch=False,
+                            )
+                        except UniqueViolation:
+                            self._discard_staged(name, staged)
+                            raise
+                base_version = snap.version
+            if log.try_commit(snap.version + 1, add=staged):
+                return n
+        if staged is not None:
+            self._discard_staged(name, staged)
+        raise CommitConflict(
+            f"append to {name} lost {MAX_COMMIT_RETRIES} version races"
+        )
 
     def _prepare_batch(
         self, spec: TableSpec, df: DataFrame, existing: DataFrame
@@ -587,72 +620,6 @@ class VechordRegistry:
             if clash:
                 raise UniqueViolation(f"duplicate {col} appending to {name}")
 
-    _MAX_COMMIT_RETRIES = 12
-
-    def _optimistic_append(self, name: str, df: DataFrame, check_unique: bool) -> int:
-        """Stage-then-commit append with conflict re-validation.
-
-        The staged files are derived from the snapshot read at staging
-        time. Losing the version race means another commit landed in
-        between; the loser's data files stay valid UNLESS the batch
-        content depended on that snapshot — serial-id seeding (restage
-        from the new max) or unique checks (re-probe only the winner's
-        DELTA files, not the whole table). Plain appends just retry the
-        version claim with the same files.
-        """
-        from vechord_spark.plans.commitlog import CommitConflict
-
-        spec = self._spec(name)
-        ai = spec.auto_increment_column
-        generates_ids = ai is not None and ai.name not in df.columns
-        uniques = spec.unique_columns() if check_unique else []
-        log = self._ensure_log(name)
-        staged: list[str] | None = None
-        base_version = -1
-        n = 0
-        for _ in range(self._MAX_COMMIT_RETRIES):
-            snap = log.snapshot()
-            if staged is None:
-                existing = self._read_snapshot(name, snap)
-                prepared = self._prepare_batch(spec, df, existing)
-                if uniques:
-                    self._check_unique(name, prepared, existing, uniques)
-                n = prepared.count()
-                staged = self._stage_data_files(name, prepared)
-                base_version = snap.version
-            elif snap.version != base_version:
-                if generates_ids:
-                    # ids were seeded from a stale max — restage
-                    self._discard_staged(name, staged)
-                    staged = None
-                    continue
-                if uniques:
-                    delta_files = [
-                        f
-                        for e in log.entries()
-                        if e["version"] > base_version
-                        for f in e.get("add", ())
-                    ]
-                    if delta_files:
-                        delta = self._read_snapshot(
-                            name, type(snap)(snap.version, tuple(delta_files))
-                        )
-                        try:
-                            self._check_unique(
-                                name, prepared, delta, uniques, check_batch=False
-                            )
-                        except UniqueViolation:
-                            self._discard_staged(name, staged)
-                            raise
-                base_version = snap.version
-            if log.try_commit(snap.version + 1, add=staged):
-                return n
-        if staged is not None:
-            self._discard_staged(name, staged)
-        raise CommitConflict(
-            f"append to {name} lost {self._MAX_COMMIT_RETRIES} version races"
-        )
-
     def upsert(self, name: str, df: DataFrame, key: str | None = None) -> int:
         """MERGE-style keyed upsert: rows in ``df`` replace existing rows
         with the same ``key`` (default: the primary key) and new keys
@@ -661,12 +628,11 @@ class VechordRegistry:
         operation. Returns the number of rows written.
 
         Plan: survivors = existing LEFT ANTI batch-keys (a broadcast
-        anti-join when the batch is small), unioned with the batch. In
-        ``"optimistic"`` mode the whole merge is ONE atomic manifest
-        commit (retried against the winner's snapshot on a version
-        race); in single-writer mode it goes through the journaled
-        rewrite. Serial ids and unique checks are bypassed — the merge
-        key IS the identity, matching ON CONFLICT semantics.
+        anti-join when the batch is small), unioned with the batch. The
+        whole merge is ONE atomic manifest commit (retried against the
+        winner's snapshot on a version race). Serial ids and unique
+        checks are bypassed — the merge key IS the identity, matching
+        ON CONFLICT semantics.
         """
         spec = self._spec(name)
         key_col = key or (spec.primary_key.name if spec.primary_key else None)
@@ -692,10 +658,7 @@ class VechordRegistry:
             )
             return survivors.unionByName(batch)
 
-        if self.concurrency == "optimistic":
-            self._optimistic_rewrite(name, build, op="upsert")
-        else:
-            self._rewrite(name, build(self.load(name)))
+        self._commit_rewrite(name, build, op="upsert")
         return n
 
     def insert_rows(self, name: str, rows: Iterable[Mapping[str, Any]]) -> int:
@@ -822,116 +785,60 @@ class VechordRegistry:
         """DELETE WHERE via filtered rewrite (reference
         vechord/client.py:268-283), plus explicit ON DELETE CASCADE into
         registered children (reference relies on Postgres FKs,
-        vechord/spec.py:173; here it is an anti-join per child table)."""
+        vechord/spec.py:173; here it is an anti-join per child table).
+        Each table's rewrite is one atomic commit (see
+        :meth:`_commit_rewrite`)."""
         spec = self._spec(name)
-        if self.concurrency == "optimistic":
-            removed_holder = [0]
+        removed = [0]
 
-            def build(df: DataFrame) -> DataFrame | None:
-                pred = build_predicate(df, conditions or {})
-                removed_holder[0] = df.filter(pred).count()
-                if removed_holder[0] == 0:
-                    return None  # nothing to delete at this snapshot
-                return df.filter(~pred)
+        def build(df: DataFrame) -> DataFrame | None:
+            pred = build_predicate(df, conditions or {})
+            removed[0] = df.filter(pred).count()
+            if removed[0] == 0:
+                return None  # nothing to delete at this snapshot
+            return df.filter(~pred)
 
-            self._optimistic_rewrite(name, build, op="delete")
-            if removed_holder[0] and cascade:
-                self._cascade_from(spec)
-            return removed_holder[0]
-        df = self.load(name)
-        pred = build_predicate(df, conditions or {})
-        removed = df.filter(pred).count()
-        if removed == 0:
-            return 0
-        survivors = df.filter(~pred)
-        self._rewrite(name, survivors)
-        if cascade:
+        self._commit_rewrite(name, build, op="delete")
+        if removed[0] and cascade:
             self._cascade_from(spec)
-        return removed
+        return removed[0]
 
-    def _optimistic_rewrite(self, name: str, build, op: str = "rewrite"):
+    # age past which a file no commit references is deleted by the
+    # vacuum that closes every rewrite and maintain(): one hour of
+    # history for time travel, and far beyond any in-flight writer's
+    # window between staging its files and committing them
+    HISTORY_RETENTION_S = 3600.0
+
+    def _commit_rewrite(self, name: str, build, op: str = "rewrite"):
         """Replace ``name``'s contents with ``build(current_snapshot_df)``
         in ONE atomic manifest commit (add survivors, remove every prior
-        file) — no publish window, unlike the rename-based single-writer
-        ``_rewrite``. A lost version race re-runs ``build`` against the
-        winner's snapshot, so a DELETE that races an append also deletes
-        matching late-arriving rows instead of resurrecting them.
-        ``build`` may return None to signal a no-op at this snapshot.
+        file) — no publish window: the survivors are written beside
+        the live files, and the replaced files stay on disk for time
+        travel. The commit ends with a vacuum at
+        :attr:`HISTORY_RETENTION_S`, so the files of older rewrites do
+        not pile up on a table that is never maintained. A lost version race re-runs ``build``
+        against the winner's snapshot, so a DELETE that races an append
+        also deletes matching late-arriving rows instead of
+        resurrecting them. ``build`` may return None to signal a no-op
+        at this snapshot. Returns the snapshot after the commit (the
+        read one for a no-op).
         """
-        from vechord_spark.plans.commitlog import CommitConflict
-
         log = self._ensure_log(name)
-        for _ in range(self._MAX_COMMIT_RETRIES):
+        for _ in range(MAX_COMMIT_RETRIES):
             snap = log.snapshot()
-            out = build(self._read_snapshot(name, snap))
+            out = build(self._read_files(name, snap.files))
             if out is None:
                 return snap
             staged = self._stage_data_files(name, out)
             if log.try_commit(
                 snap.version + 1, add=staged, remove=list(snap.files), op=op
             ):
-                return log.snapshot()
+                log.vacuum(older_than_s=self.HISTORY_RETENTION_S)
+                return log.snapshot(snap.version + 1)
             self._discard_staged(name, staged)
         raise CommitConflict(
-            f"{op} of {name} lost {self._MAX_COMMIT_RETRIES} version races"
+            f"{op} of {name} lost {MAX_COMMIT_RETRIES} version races"
         )
-
-    def _rewrite(self, name: str, df: DataFrame) -> None:
-        """Replace ``name``'s storage with ``df`` distributedly.
-
-        Survivors are written executor-side to a run-scoped staging
-        directory (the live files ``df`` reads from stay intact during
-        the write), then published with two directory renames — no row
-        ever passes through the driver, so the rewrite scales with the
-        cluster, not driver memory.
-
-        Crash safety: the publish window between the two renames is NOT
-        atomic — for its duration the live path is absent. An intent
-        journal (INTENT.json, written before the first rename) makes
-        every crash state recoverable: ``load`` detects the missing
-        live dir, rolls FORWARD from the surviving staging copy or BACK
-        from the trash copy (``_recover_rewrite``), and never silently
-        serves an empty table. A crash before the journal write leaves
-        the old table untouched. On object stores without atomic
-        renames, point ``base_path`` at a posix-rename filesystem or
-        front the table with a manifest catalog; the journal protocol
-        is the same.
-        """
-        import json
-        import uuid
-
-        spec = self._spec(name)
-        run_id = uuid.uuid4().hex
-        staging = self.base_path / ".staging" / f"rewrite-{run_id}" / name
-        df.select(*spec.field_names).write.mode("overwrite").parquet(str(staging))
-        live = Path(self.table_path(name))
-        # table metadata rides INSIDE the table dir (the _alters.json
-        # schema-evolution overlay): carry it into the staging copy, or
-        # the dir swap below would silently revert the evolved schema
-        # for every future session (the overlay replays at register())
-        alters = live / "_alters.json"
-        if alters.exists():
-            shutil.copy2(alters, staging / "_alters.json")
-        trash = self.base_path / ".trash" / f"rewrite-{run_id}" / name
-        intent_path = staging.parent / "INTENT.json"
-        intent_path.write_text(
-            json.dumps(
-                {
-                    "table": name,
-                    "staging": str(staging),
-                    "live": str(live),
-                    "trash": str(trash),
-                }
-            )
-        )
-        if live.exists():
-            trash.parent.mkdir(parents=True, exist_ok=True)
-            live.rename(trash)
-        staging.rename(live)
-        intent_path.unlink(missing_ok=True)
-        for scratch in (staging.parent, trash.parent):
-            if scratch.exists():
-                shutil.rmtree(scratch)
 
     def compact(
         self,
@@ -948,9 +855,10 @@ class VechordRegistry:
         file-open overhead and defeat row-group pruning. Compaction is
         the lakehouse OPTIMIZE: read, ``coalesce`` to
         ceil(bytes / target) partitions (no shuffle — partitions merge
-        in place), publish through the crash-recoverable ``_rewrite``
-        journal. Pass ``shuffle=True`` to ``repartition`` instead when
-        the batches were skewed and merged files must come out even.
+        in place), commit the rewrite atomically
+        (:meth:`_commit_rewrite`). Pass ``shuffle=True`` to
+        ``repartition`` instead when the batches were skewed and merged
+        files must come out even.
 
         ``order_by`` — OPTIMIZE ... ORDER BY: range-repartition on the
         named columns and sort within partitions, so every output file
@@ -966,79 +874,47 @@ class VechordRegistry:
         are pure layout changes: row set, schema, and every reader are
         unchanged.
 
-        Index-ledger contract: a rewrite invalidates every index's
-        files.json (the ledger can no longer prove append-only
-        history), which would push the NEXT extend_* through the
-        O(table) pk anti-join. Compaction therefore (a) runs each
-        existing index's extend_* FIRST — O(appended data) while the
-        old ledger is still valid, bringing coverage current — then
-        (b) under the single-writer contract, snapshots a fresh
-        files.json against the compacted file set (row-identical to
-        the pre-compact table, so coverage is unchanged by
+        Index coverage contract: a rewrite removes files, so an index
+        covering an older version could no longer read the rows
+        appended since from the log, and the NEXT extend_* would pay
+        the O(table) pk anti-join. Compaction therefore runs each
+        existing index's extend_* FIRST — O(appended data), bringing
+        coverage current — then commits, and records the compacted
+        version as covered by every layout that covered the version
+        the commit landed on (:meth:`_readopt_coverage`; same rows by
         construction). Day-N extends stay O(appended data) across any
-        number of compactions. Under ``concurrency="optimistic"`` step
-        (b) is SKIPPED: a lost version race re-runs the rewrite on a
-        concurrent writer's snapshot, so the compacted files may hold
-        rows no index has seen — the next extend's anti-join re-adopts
-        the ledger safely instead.
+        number of compactions. When a concurrent commit landed in
+        between, the rewrite re-ran on a snapshot holding rows no index
+        has seen, so coverage is left as it was and the next extend
+        pays the anti-join once.
 
         Returns ``{"files_before", "files_after", "bytes"}``. No-op
         (zeros) for an empty table.
         """
         self._spec(name)
-        ledgered = self._extend_indexes_for_rewrite(name)
+        stats = {"files_before": 0, "files_after": 0, "bytes": 0}
+        if not self._table_exists(name):
+            return stats
+        self._extend_indexes_for_rewrite(name)
         live = Path(self.table_path(name))
-        if self.concurrency == "optimistic" and live.exists():
-            stats: dict[str, int] = {}
 
-            def build(df: DataFrame) -> DataFrame | None:
-                snap = self._ensure_log(name).snapshot()
-                sizes = [
-                    (live / f).stat().st_size
-                    for f in snap.files
-                    if (live / f).exists()
-                ]
-                stats["files_before"] = len(sizes)
-                stats["bytes"] = sum(sizes)
-                if not sizes:
-                    return None
-                n_out = max(1, -(-stats["bytes"] // max(1, target_file_bytes)))
-                return self._compact_transform(
-                    df, n_out, shuffle, order_by, zorder_by
-                )
+        def build(df: DataFrame) -> DataFrame | None:
+            snap = self._ensure_log(name).snapshot()
+            sizes = [
+                (live / f).stat().st_size for f in snap.files if (live / f).exists()
+            ]
+            stats["files_before"] = len(sizes)
+            stats["bytes"] = sum(sizes)
+            if not sizes:
+                return None
+            n_out = max(1, -(-stats["bytes"] // max(1, target_file_bytes)))
+            return self._compact_transform(df, n_out, shuffle, order_by, zorder_by)
 
-            final = self._optimistic_rewrite(name, build, op="compact")
-            stats["files_after"] = len(final.files) if stats.get("bytes") else 0
-            # NO ledger snapshot in optimistic mode: a lost version race
-            # re-runs build on the WINNER's snapshot, folding rows a
-            # concurrent writer appended AFTER the pre-rewrite extends
-            # into the compacted files — snapshotting would claim those
-            # never-indexed rows as covered forever. The ledger is left
-            # invalid; the next extend_* pays one pk anti-join, indexes
-            # whatever is new, and re-adopts the ledger safely.
-            return {
-                "files_before": stats.get("files_before", 0),
-                "files_after": stats.get("files_after", 0),
-                "bytes": stats.get("bytes", 0),
-            }
-        if not live.exists():
-            self._recover_rewrite(name)
-        if not live.exists():
-            return {"files_before": 0, "files_after": 0, "bytes": 0}
-        files = [p for p in live.rglob("*.parquet") if p.is_file()]
-        total = sum(p.stat().st_size for p in files)
-        n_out = max(1, -(-total // max(1, target_file_bytes)))
-        df = self._compact_transform(
-            self.load(name), n_out, shuffle, order_by, zorder_by
-        )
-        self._rewrite(name, df)
-        after = sum(1 for p in live.rglob("*.parquet") if p.is_file())
-        self._snapshot_index_ledgers(name, ledgered, self.load(name))
-        return {
-            "files_before": len(files),
-            "files_after": after,
-            "bytes": total,
-        }
+        final = self._commit_rewrite(name, build, op="compact")
+        if stats["bytes"]:
+            stats["files_after"] = len(final.files)
+            self._readopt_coverage(name, final.version)
+        return stats
 
     def _compact_transform(
         self,
@@ -1129,10 +1005,10 @@ class VechordRegistry:
         stay range-clustered on ``idx``), via a staged write +
         directory swap (:meth:`_swap_index_dir`). Row sets are
         unchanged, so search results are identical (test-pinned) and
-        the TABLE file ledger is untouched (files.json tracks the
-        table's files, not the index's). Single-writer maintenance,
-        like the extends. Returns per-directory file counts after,
-        keyed ``<kind>_<dir>_files`` (e.g. ``ivf_data_files``).
+        each layout's covered table version is untouched. Runs under
+        each layout's maintenance lock, like the extends. Returns
+        per-directory file counts after, keyed ``<kind>_<dir>_files``
+        (e.g. ``ivf_data_files``).
 
         Crash contract: the directory swap (live renamed away,
         replacement renamed in) is journaled — a crash inside the
@@ -1255,48 +1131,32 @@ class VechordRegistry:
         except MaintenanceBusy:
             return  # a live compactor owns the journal
 
-    def _extend_indexes_for_rewrite(self, name: str) -> list[Path]:
+    def _extend_indexes_for_rewrite(self, name: str) -> None:
         """Bring every existing index of ``name`` current (O(appended
-        data) via each index's own ledger) and return their paths —
-        the pre-rewrite half of compact()'s ledger re-adoption.
-
-        A registry whose spec cannot drive an index's extend (e.g. a
-        maintenance CLI that inferred the columns from parquet and so
-        lost the Vector/Keyword metadata) skips that index: its ledger
-        is NOT snapshotted after the rewrite, and the next extend from
-        a fully-specified registry re-adopts it via the anti-join."""
-        ledgered: list[Path] = []
+        data) from the log) — the pre-rewrite half of compact()'s
+        coverage re-adoption. A layout this registry cannot extend is
+        skipped: its spec lacks the indexed column (e.g. a maintenance
+        CLI that inferred the columns from parquet and so lost the
+        Vector/Keyword metadata), or another session holds its
+        maintenance lock. Its coverage then stays behind the rewrite,
+        and its next extend re-adopts through the anti-join."""
         extenders = self._extenders()
-        for kind, ipath in self._layouts(name).items():
-            try:
+        for kind in self._layouts(name):
+            with contextlib.suppress(SchemaError, MaintenanceBusy):
                 extenders[kind](name)
-            except SchemaError:
-                continue  # spec can't extend this index: leave its
-                # ledger alone (snapshotting would claim unindexed
-                # rows as covered)
-            except MaintenanceBusy:
-                continue  # another session is extending this index
-                # RIGHT NOW: its in-flight ledger record will go
-                # stale the moment our rewrite lands, and the next
-                # extend re-adopts via the anti-join — skipping is
-                # the safe move (snapshotting would claim rows the
-                # concurrent extend hasn't appended yet)
-            ledgered.append(ipath)
-        return ledgered
 
-    def _snapshot_index_ledgers(
-        self, name: str, ledgered: list[Path], df: DataFrame
-    ) -> None:
-        """Re-adopt each index ledger after a row-preserving rewrite:
-        the indexes were brought current BEFORE the rewrite
-        (_extend_indexes_for_rewrite) and the rewrite changed files,
-        not rows, so the rewritten file set is exactly what each index
-        covers."""
-        if not ledgered:
-            return
-        files = sorted(df.inputFiles())
-        for ipath in ledgered:
-            self._record_index_files(name, ipath, files=files)
+    def _readopt_coverage(self, name: str, version: int) -> None:
+        """After a row-preserving rewrite committed as ``version``:
+        every layout covering ``version - 1``, the snapshot the rewrite
+        read, covers the same rows at ``version``. A layout whose
+        maintenance lock is held is left alone (its extend records its
+        own coverage), and an ``extend.intent`` marker stays: only an
+        extend's recovery clears it."""
+        for ipath in self._layouts(name).values():
+            with contextlib.suppress(MaintenanceBusy):
+                with self._maintenance_lock(ipath):
+                    if self._covered_version(ipath) == version - 1:
+                        self._update_meta(ipath, covered=version)
 
     def optimize_zorder(
         self,
@@ -1310,12 +1170,11 @@ class VechordRegistry:
         (col_a, col_b) — the lakehouse ``OPTIMIZE ZORDER BY``: after
         the rewrite, parquet min-max stats prune scans filtered on
         EITHER column (plans/zorder.py has the layout argument). Runs
-        through the same crash-recoverable publish as compact(), with
-        the SAME index-ledger bracket (extend every index first, then
-        snapshot fresh files.json against the rewritten layout — a
-        row-preserving rewrite must not push the next extend_* through
-        the O(table) anti-join); snapshot-atomic under
-        ``concurrency="optimistic"``.
+        through the same atomic commit as compact(), with the SAME
+        index-coverage bracket (extend every index first, then record
+        the rewritten version as covered — a row-preserving rewrite
+        must not push the next extend_* through the O(table)
+        anti-join).
 
         Returns ``{"files_after", "rows"}``; zeros for an empty table.
         """
@@ -1324,8 +1183,9 @@ class VechordRegistry:
         spec.column(col_b)
         from vechord_spark.plans.zorder import zorder_key
 
-        ledgered = self._extend_indexes_for_rewrite(name)
-        live = Path(self.table_path(name))
+        if not self._table_exists(name):
+            return {"files_after": 0, "rows": 0}
+        self._extend_indexes_for_rewrite(name)
 
         def build(df: DataFrame) -> DataFrame:
             keyed, _ = zorder_key(df, col_a, col_b, bits)
@@ -1335,22 +1195,9 @@ class VechordRegistry:
                 .drop("__z")
             )
 
-        if self.concurrency == "optimistic" and live.exists():
-            final = self._optimistic_rewrite(name, build, op="zorder")
-            # no ledger snapshot in optimistic mode — see compact():
-            # a lost version race can fold concurrent appends into the
-            # rewrite; the next extend's anti-join re-adopts safely
-            n_rows = self.load(name).count()
-            return {"files_after": len(final.files), "rows": n_rows}
-        if not live.exists():
-            self._recover_rewrite(name)
-        if not live.exists():
-            return {"files_after": 0, "rows": 0}
-        df = self.load(name)
-        self._rewrite(name, build(df))
-        after = sum(1 for p in live.rglob("*.parquet") if p.is_file())
-        self._snapshot_index_ledgers(name, ledgered, self.load(name))
-        return {"files_after": after, "rows": self.load(name).count()}
+        final = self._commit_rewrite(name, build, op="zorder")
+        self._readopt_coverage(name, final.version)
+        return {"files_after": len(final.files), "rows": self.load(name).count()}
 
     def _cascade_from(self, parent: TableSpec) -> None:
         for child in self.tables.values():
@@ -1369,66 +1216,72 @@ class VechordRegistry:
                     .count()
                 )
                 if orphans:
-                    if self.concurrency == "optimistic":
 
-                        def build(
-                            df: DataFrame,
-                            local_col=local_col,
-                            p_col=p_col,
-                            parent_name=parent.name,
-                        ) -> DataFrame:
-                            keys = self.load(parent_name).select(
-                                F.col(p_col).alias(local_col)
-                            )
-                            return df.join(keys, on=local_col, how="left_semi")
-
-                        self._optimistic_rewrite(child.name, build, op="cascade")
-                    else:
-                        surviving = child_df.join(
-                            parent_keys, on=local_col, how="left_semi"
+                    def build(
+                        df: DataFrame,
+                        local_col=local_col,
+                        p_col=p_col,
+                        parent_name=parent.name,
+                    ) -> DataFrame:
+                        keys = self.load(parent_name).select(
+                            F.col(p_col).alias(local_col)
                         )
-                        self._rewrite(child.name, surviving)
+                        return df.join(keys, on=local_col, how="left_semi")
+
+                    self._commit_rewrite(child.name, build, op="cascade")
                     self._cascade_from(child)
 
     # --------------------------------------------------------------- search
     # ---------------------------------------------------------------- index
     # ------------------------------------------------- index maintenance
-    def _record_index_files(
-        self, name: str, ipath: Path, files: list[str]
-    ) -> None:
-        """Snapshot the data-file set the index has SEEN — the
-        append-only delta source for the extend_* methods (new files =
-        new rows; a parquet append never rewrites existing files).
+    def _record_coverage(self, ipath: Path, version: int) -> None:
+        """Record in the layout's ``meta.json`` the table version whose
+        rows it now holds (``covered``; -1 for a table never written) —
+        the delta source of the extend_* methods: the log names the
+        files committed after it (:meth:`_new_rows_since_index`).
 
-        ``files`` is REQUIRED and must be captured from the exact
-        DataFrame the build/extend scanned (``df.inputFiles()`` on the
-        df loaded at operation start): re-listing the table here would
-        also swallow files a CONCURRENT writer appended after that scan
-        (optimistic mode), silently excluding those rows from every
-        future delta. The ledger must only ever contain files whose
-        rows are actually in the index.
+        ``version`` is that of the snapshot the build or extend READ,
+        never a re-read latest version: a commit landing after that
+        read holds rows the layout has not seen.
 
-        Crash contract (single-writer maintenance): the index append
-        lands BEFORE this record; the window between them is covered by
-        the ``extend.intent`` marker (_mark_extend_intent), which
-        forces the next extend through the idempotent anti-join path —
-        recovery is automatic for the vector/multivec layouts; the
-        keyword path additionally rebuilds its derived tables under the
-        marker (see extend_keyword_index)."""
-        import json
-
-        (ipath / "files.json").write_text(json.dumps(sorted(files)))
+        Crash contract: the index append lands BEFORE this record; the
+        window between them is covered by the ``extend.intent`` marker
+        (_mark_extend_intent), which forces the next extend through the
+        idempotent anti-join path — recovery is automatic for the
+        vector/multivec layouts; the keyword path additionally rebuilds
+        its derived tables under the marker (see extend_keyword_index)."""
+        self._update_meta(ipath, covered=int(version))
         # the extend that just recorded is fully landed: clear its
         # crash-recovery marker (see _mark_extend_intent)
         (ipath / "extend.intent").unlink(missing_ok=True)
 
+    def _covered_version(self, ipath: Path) -> int | None:
+        """The table version the layout covers (:meth:`_record_coverage`),
+        None for a layout written by older code."""
+        return self._vector_index_meta(ipath).get("covered")
+
+    @staticmethod
+    def _update_meta(ipath: Path, **changes) -> None:
+        """Merge ``changes`` into the layout's ``meta.json`` (a None
+        value drops its key), replacing the file atomically."""
+        import json
+
+        mp = ipath / "meta.json"
+        meta = json.loads(mp.read_text()) if mp.exists() else {}
+        meta.update(changes)
+        tmp = ipath / ".meta.json.tmp"
+        tmp.write_text(
+            json.dumps({k: v for k, v in meta.items() if v is not None})
+        )
+        os.replace(tmp, mp)
+
     def _mark_extend_intent(self, ipath: Path) -> None:
-        """Crash self-healing for the extend_* ledger path: written
-        just before the index append, cleared by _record_index_files
-        after the ledger lands. While present, _new_rows_since_index
-        refuses the file-diff fast path, so an extend that crashed
-        between append and record is retried through the IDEMPOTENT pk
-        anti-join instead of double-appending its delta."""
+        """Crash self-healing for the extend_* delta path: written
+        just before the index append, cleared by _record_coverage
+        after the covered version lands. While present,
+        _new_rows_since_index refuses the log delta, so an extend that
+        crashed between append and record is retried through the
+        IDEMPOTENT pk anti-join instead of double-appending its delta."""
         (ipath / "extend.intent").write_text("")
 
     @contextlib.contextmanager
@@ -1451,7 +1304,6 @@ class VechordRegistry:
         if not ipath.exists():
             yield
             return
-        import os
 
         try:
             import fcntl
@@ -1471,35 +1323,31 @@ class VechordRegistry:
         finally:
             os.close(fd)  # closing the fd releases the flock
 
-    def _new_rows_since_index(self, name: str, ipath: Path):
-        """(new_rows, files_covered) — the rows appended since the
-        index last saw the table plus the exact file set the extended
-        index will cover, or (None, None) when the file ledger can't
-        prove append-only history (no ledger from an older index; a
-        DELETE/compact rewrote files) — callers then fall back to the
-        pk anti-join. File-diff reads ONLY the new files: extension
-        cost is O(appended data), independent of table or index
-        size."""
-        import json
+    def _snapshot(self, name: str):
+        """The latest snapshot of ``name``: version -1 with no files for
+        a table never written (nothing is created for it)."""
+        if not self._table_exists(name):
+            return Snapshot(version=-1, files=())
+        return self._ensure_log(name).snapshot()
 
-        ledger = ipath / "files.json"
-        if (ipath / "extend.intent").exists():
+    def _new_rows_since_index(self, name: str, ipath: Path):
+        """``(new_rows, snapshot)``: the rows committed after the table
+        version the layout covers, read from ONLY the files the log
+        added since (O(appended data), independent of table or index
+        size), and the snapshot that brings the layout to. ``new_rows``
+        is None when the log cannot name them — a layout from older
+        code (no covered version), a rewrite (DELETE/compact) since, or
+        an ``extend.intent`` marker — and callers then anti-join the
+        snapshot's rows on the primary key."""
+        covered = self._covered_version(ipath)
+        if covered is None or (ipath / "extend.intent").exists():
             # a previous extend may have appended without recording —
             # only the anti-join path is safe (idempotent)
-            return None, None
-        if not ledger.exists():
-            return None, None
-        seen = set(json.loads(ledger.read_text()))
-        cur = set(self.load(name).inputFiles())
-        if not seen <= cur:
-            return None, None  # files were rewritten/removed: ledger invalid
-        fresh = sorted(cur - seen)
-        if not fresh:
-            return self.load(name).limit(0), sorted(seen)
-        return (
-            self.spark.read.schema(self.load(name).schema).parquet(*fresh),
-            sorted(seen | set(fresh)),
-        )
+            return None, self._snapshot(name)
+        snap, fresh, rewritten = self._ensure_log(name).since(covered)
+        if rewritten:
+            return None, snap
+        return self._read_files(name, fresh), snap
 
     # every derived layout a table can have, by kind (also the
     # directory suffix): its row directories, the first marking the
@@ -1579,7 +1427,6 @@ class VechordRegistry:
         swap, drop, and writers in other registries or processes on
         the same path), so every write changes it. One directory walk,
         no more than the listing ``spark.read.parquet`` does."""
-        import os
 
         out = []
         for root, _dirs, files in os.walk(ipath):
@@ -1746,11 +1593,10 @@ class VechordRegistry:
         vec_col = spec.vector_column
         if vec_col is None:
             raise SchemaError(f"table {name} has no vector column")
-        df = self.load(name)
-        # ledger snapshot from the EXACT df this build scans — listing
-        # again at record time would claim concurrently-appended files
-        # whose rows the index never saw (see _record_index_files)
-        scanned_files = sorted(df.inputFiles())
+        # the layout covers the version of the EXACT snapshot this
+        # build scans (see _record_coverage)
+        snap = self._snapshot(name)
+        df = self._read_files(name, snap.files)
         n = df.count()
         if n == 0:
             raise SchemaError(f"cannot index empty table {name}")
@@ -1894,7 +1740,7 @@ class VechordRegistry:
                 }
             )
         )
-        self._record_index_files(name, ipath, files=scanned_files)
+        self._record_coverage(ipath, snap.version)
         return n_lists
 
     def _load_opq_rotation(self, ipath: Path):
@@ -1990,18 +1836,17 @@ class VechordRegistry:
         if pk is None:
             raise SchemaError(f"extend_vector_index needs a primary key")
         centroids = self._read_centroids(ipath / "centroids")
-        # file-ledger fast path: read ONLY files appended since the
-        # index last saw the table (O(new data)); fall back to the pk
-        # anti-join when the ledger cannot prove append-only history
-        new, covered = self._new_rows_since_index(name, ipath)
+        # log delta: read ONLY files committed since the covered
+        # version (O(new data)); fall back to the pk anti-join when the
+        # log cannot name them (see _new_rows_since_index)
+        new, snap = self._new_rows_since_index(name, ipath)
         if new is None:
-            base = self.load(name)
-            covered = sorted(base.inputFiles())
+            base = self._read_files(name, snap.files)
             indexed = self.spark.read.parquet(str(ipath / "data")).select(pk.name)
             new = base.join(indexed, pk.name, "left_anti")
         n_new = new.count()
         if n_new == 0:
-            self._record_index_files(name, ipath, files=covered)
+            self._record_coverage(ipath, snap.version)
             return 0
         rot = self._load_opq_rotation(ipath)
         if rot is not None:
@@ -2028,7 +1873,7 @@ class VechordRegistry:
         fresh.write.mode("append").partitionBy("centroid_id").parquet(
             str(ipath / "data")
         )
-        self._record_index_files(name, ipath, files=covered)
+        self._record_coverage(ipath, snap.version)
         return n_new
 
     def _reencoder(self, ipath: Path, vec_col: str):
@@ -2278,7 +2123,6 @@ class VechordRegistry:
         cleanup, so a crash during cleanup can never trigger a
         rollback of the already-published layout."""
         import json
-        import os
         import uuid
 
         run = uuid.uuid4().hex
@@ -2306,9 +2150,12 @@ class VechordRegistry:
                     dest = tgt / f.name
                     if dest.exists():
                         # two source partitions merged into one target:
-                        # parquet part names are task-uuid-unique, but
-                        # stay safe on collision
-                        dest = tgt / f"m{cid}-{f.name}"
+                        # one write job gives every partition the same
+                        # part names. Prefix the source cell, keeping a
+                        # hidden checksum sidecar (``.<name>.crc``)
+                        # hidden and paired with its renamed data file
+                        dot = "." if f.name.startswith(".") else ""
+                        dest = tgt / f"{dot}m{cid}-{f.name.removeprefix('.')}"
                     os.link(f, dest)
         self._write_centroids(stage_cents, new_cents)
 
@@ -2552,9 +2399,9 @@ class VechordRegistry:
         empty keep their centroid (probe search returns nothing from
         them) — run :meth:`merge_vector_index` after a heavy delete to
         fold them away. Same lock + rollback-only journal. Returns
-        ``{"pruned_rows", "rewritten_cells", "lists"}``; the table
-        file ledger is untouched (prune never un-covers a live row —
-        the next extend re-adopts as usual)."""
+        ``{"pruned_rows", "rewritten_cells", "lists"}``; the covered
+        table version is untouched (prune never un-covers a live
+        row)."""
         _, ipath = self._open_layout(name, "ivf")
         pk = self._spec(name).primary_key
         if pk is None:
@@ -2669,42 +2516,41 @@ class VechordRegistry:
           recorded count, ``None`` when unknown — see
           :meth:`_set_sparse_docs`). More than the table holds means
           deleted docs still rank;
-        - ``ledger_fresh``: whether files.json still proves
-          append-only history against the CURRENT table files (False
-          after a compact/DELETE → the next extend pays the anti-join
-          and re-adopts);
-        - ``files_behind``: table files appended since the layout last
-          extended (0 = coverage current; >0 = run extend_*).
+        - ``ledger_fresh``: whether the log still names the rows
+          committed since the layout's covered version as added files
+          (False after a compact/DELETE, or for a layout from older
+          code → the next extend pays the anti-join and re-adopts);
+        - ``files_behind``: live table files the covered version does
+          not hold (0 = coverage current; >0 = run extend_*).
 
-        Driver-side file listing plus one small groupBy per IVF
-        layout and a one-row read for BM25; no table scan. Returns a
-        plain dict, unbuilt layouts omitted."""
-        import json
-
+        Driver-side log replay plus one small groupBy per IVF layout
+        and a one-row read for BM25; no table scan. Returns a plain
+        dict, unbuilt layouts omitted."""
         self._spec(name)
         out: dict = {}
-        try:
-            cur_files = set(self.load(name).inputFiles())
-        except Exception:  # noqa: BLE001 - table may be empty/missing
-            cur_files = set()
+        snap = self._snapshot(name)
+        log = TableLog(Path(self.table_path(name)))
 
         def _dir_stats(d: Path) -> tuple[int, int]:
             files = [p for p in d.rglob("*.parquet") if p.is_file()]
             return len(files), sum(p.stat().st_size for p in files)
 
+        deltas: dict[int, tuple] = {}  # one log replay per covered version
+
         def _ledger_state(ipath: Path) -> dict:
-            """ledger_fresh = the file-diff fast path is usable;
-            files_behind = appended files not yet covered."""
-            ledger = ipath / "files.json"
-            seen = None
-            if ledger.exists() and not (ipath / "extend.intent").exists():
-                try:
-                    seen = set(json.loads(ledger.read_text()))
-                except ValueError:
-                    pass
-            fresh = seen is not None and seen <= cur_files
-            behind = len(cur_files - seen) if seen is not None else len(cur_files)
-            return {"ledger_fresh": fresh, "files_behind": behind}
+            covered = self._covered_version(ipath)
+            if covered is None or covered > snap.version:
+                return {"ledger_fresh": False, "files_behind": len(snap.files)}
+            if covered not in deltas:
+                deltas[covered] = log.since(covered)
+            _, added, rewritten = deltas[covered]
+            # a file name is committed once, so the live files the covered
+            # version lacks are the live ones added after it
+            return {
+                "ledger_fresh": not rewritten
+                and not (ipath / "extend.intent").exists(),
+                "files_behind": len(set(snap.files).intersection(added)),
+            }
 
         layouts = self._layouts(name)
         for key in ("ivf", "mvivf"):
@@ -2782,7 +2628,7 @@ class VechordRegistry:
         index is a cheap no-op):
 
         1. **extend** — any layout with ``files_behind > 0`` (appends
-           not yet covered) or a stale ledger (``ledger_fresh`` False:
+           not yet covered) or a stale coverage (``ledger_fresh`` False:
            the next extend pays the pk anti-join once and re-adopts,
            restoring O(appended-data) extends — the example's closing
            step after a table compact).
@@ -2808,6 +2654,11 @@ class VechordRegistry:
            ``compact_files_per_cell`` files per cell (each extend
            appends one file set per touched partition), or a BM25 or
            sparse layout over ``compact_bm25_files`` files.
+        6. **vacuum** — table files that no commit references anymore
+           (rewrite history, crashed writers' orphans) and that are
+           older than :attr:`HISTORY_RETENTION_S` are deleted, as at
+           the end of every rewrite commit; younger ones stay for time
+           travel and for writers whose commit has not landed.
 
         Each primitive takes the per-layout maintenance lock itself;
         this method holds NO outer lock, so a concurrent maintainer
@@ -2910,6 +2761,10 @@ class VechordRegistry:
             actions.append({"op": "compact_index", **self.compact_index(name)})
             stats = self.index_stats(name)
 
+        # 6. history: files no commit references, past the retention age
+        vacuumed = self.vacuum(name, older_than_s=self.HISTORY_RETENTION_S)
+        if vacuumed:
+            actions.append({"op": "vacuum", "files": len(vacuumed)})
         return {"actions": actions, "before": before, "after": stats}
 
     def _recover_recluster(self, ipath: Path, *, locked: bool = False) -> None:
@@ -2933,8 +2788,8 @@ class VechordRegistry:
         (flock is per open file description, even same-process) and
         recovery would be silently skipped — leaving extend to either
         fail on the renamed-away layout or append rows that the next
-        unlocked load rolls back while files.json already marks them
-        covered."""
+        unlocked load rolls back while the layout's covered version
+        already counts them."""
         import json
 
         if not (ipath / "recluster.intent.json").exists() and not (
@@ -2998,15 +2853,14 @@ class VechordRegistry:
         if pk is None:
             raise SchemaError("extend_multivec_index needs a primary key")
         centroids = self._read_centroids(ipath / "centroids")
-        new, covered = self._new_rows_since_index(name, ipath)
+        new, snap = self._new_rows_since_index(name, ipath)
         if new is None:
-            base = self.load(name)
-            covered = sorted(base.inputFiles())
+            base = self._read_files(name, snap.files)
             indexed = self.spark.read.parquet(str(ipath / "data")).select(pk.name)
             new = base.join(indexed, pk.name, "left_anti")
         n_new = new.count()
         if n_new == 0:
-            self._record_index_files(name, ipath, files=covered)
+            self._record_coverage(ipath, snap.version)
             return 0
         fresh = assign_centroids(
             new.withColumn("__mean", mean_vector(mv_col.name)),
@@ -3022,7 +2876,7 @@ class VechordRegistry:
         fresh.write.mode("append").partitionBy("centroid_id").parquet(
             str(ipath / "data")
         )
-        self._record_index_files(name, ipath, files=covered)
+        self._record_coverage(ipath, snap.version)
         return n_new
 
     def build_multivec_index(
@@ -3043,10 +2897,8 @@ class VechordRegistry:
         mv_col = spec.multivec_column
         if mv_col is None:
             raise SchemaError(f"table {name} has no multivector column")
-        df = self.load(name)
-        # same race guard as build_vector_index: snapshot the scanned
-        # file set now, not at record time
-        scanned_files = sorted(df.inputFiles())
+        snap = self._snapshot(name)  # see build_vector_index
+        df = self._read_files(name, snap.files)
         n = df.count()
         if n == 0:
             raise SchemaError(f"cannot index empty table {name}")
@@ -3065,7 +2917,7 @@ class VechordRegistry:
             self._write_centroids(
                 ipath / "token_centroids", enumerate(index.token_centroids)
             )
-        self._record_index_files(name, ipath, files=scanned_files)
+        self._record_coverage(ipath, snap.version)
         return n_lists
 
     def _load_multivec_index(self, name: str):
@@ -3648,10 +3500,8 @@ class VechordRegistry:
         pk = spec.primary_key
         if pk is None:
             raise SchemaError(f"table {name} needs a primary key for BM25")
-        df = self.load(name)
-        # same race guard as build_vector_index: the ledger gets the
-        # file set of the EXACT df the postings were tokenized from
-        scanned_files = sorted(df.inputFiles())
+        snap = self._snapshot(name)  # see build_vector_index
+        df = self._read_files(name, snap.files)
         index = Bm25Index(df, pk.name, kw_col.name, tokenizer=tokenizer)
         ipath = self._layout_path(name, "bm25")
         if ipath.exists():
@@ -3691,7 +3541,7 @@ class VechordRegistry:
                 "max_input_chars_per_word": tokenizer.max_input_chars_per_word,
             }
         (ipath / "meta.json").write_text(json.dumps(meta))
-        self._record_index_files(name, ipath, files=scanned_files)
+        self._record_coverage(ipath, snap.version)
         return self.spark.read.parquet(str(ipath / "postings")).count()
 
     def _rebuild_keyword_derived(self, ipath: Path) -> None:
@@ -3772,12 +3622,11 @@ class VechordRegistry:
         # appended postings without landing the derived tables — the
         # derived tables must be rebuilt from postings this run
         recovering = (ipath / "extend.intent").exists()
-        # file-ledger fast path (O(new data)); anti-join fallback when
-        # the ledger cannot prove append-only history
-        new, covered = self._new_rows_since_index(name, ipath)
+        # log delta (O(new data)); anti-join fallback when the log
+        # cannot name it (see _new_rows_since_index)
+        new, snap = self._new_rows_since_index(name, ipath)
         if new is None:
-            base = self.load(name)
-            covered = sorted(base.inputFiles())
+            base = self._read_files(name, snap.files)
             indexed = (
                 old.postings.select(F.col("doc_id").alias(pk.name)).distinct()
             )
@@ -3789,7 +3638,7 @@ class VechordRegistry:
                 # anti-join found nothing new) but its docfreq/stats
                 # never did — repair before clearing the marker
                 self._rebuild_keyword_derived(ipath)
-            self._record_index_files(name, ipath, files=covered)
+            self._record_coverage(ipath, snap.version)
             return 0
         delta = Bm25Index(new, pk.name, kw_col.name, tokenizer=old.tokenizer)
         self._mark_extend_intent(ipath)
@@ -3800,7 +3649,7 @@ class VechordRegistry:
             # the crashed run — an incremental merge would bake the
             # staleness in; re-derive both from the appended postings
             self._rebuild_keyword_derived(ipath)
-            self._record_index_files(name, ipath, files=covered)
+            self._record_coverage(ipath, snap.version)
             return n_new
         # merged derived tables: materialize BEFORE overwriting the
         # directories they derive from (localCheckpoint cuts the lineage
@@ -3840,7 +3689,7 @@ class VechordRegistry:
         )
         merged_df.write.mode("overwrite").parquet(str(ipath / "docfreq"))
         merged_stats.write.mode("overwrite").parquet(str(ipath / "stats"))
-        self._record_index_files(name, ipath, files=covered)
+        self._record_coverage(ipath, snap.version)
         return n_new
 
     def _load_keyword_index(self, name: str, *, locked: bool = False):
@@ -3913,7 +3762,7 @@ class VechordRegistry:
         written RANGE-CLUSTERED on ``idx`` (repartitionByRange + sort)
         so a query's handful of dimensions skip whole files on parquet
         footer min/max. Returns the number of postings rows; records
-        the table file ledger so :meth:`extend_sparse_index` stays
+        the covered table version so :meth:`extend_sparse_index` stays
         O(appended data)."""
         spec = self._spec(name)
         sv = spec.sparse_column
@@ -3922,8 +3771,8 @@ class VechordRegistry:
         pk = spec.primary_key
         if pk is None:
             raise SchemaError(f"table {name} needs a primary key for sparse search")
-        df = self.load(name)
-        scanned_files = sorted(df.inputFiles())
+        snap = self._snapshot(name)  # see build_vector_index
+        df = self._read_files(name, snap.files)
         posts = self._sparse_postings_frame(df, pk.name, sv.name)
         ipath = self._sparse_index_path(name)
         if ipath.exists():
@@ -3937,7 +3786,7 @@ class VechordRegistry:
             .first()
         )
         self._set_sparse_docs(ipath, int(n["docs"]))
-        self._record_index_files(name, ipath, files=scanned_files)
+        self._record_coverage(ipath, snap.version)
         return int(n["n"])
 
     def _set_sparse_docs(self, ipath: Path, docs: int | None) -> None:
@@ -3947,13 +3796,7 @@ class VechordRegistry:
         cells to decide whether the ghost sweep runs. ``None`` marks
         it unknown (an extend through the pk anti-join cannot tell
         indexed ghosts from live docs); the next sweep records it."""
-        import json
-
-        meta = ipath / "meta.json"
-        if docs is None:
-            meta.unlink(missing_ok=True)
-        else:
-            meta.write_text(json.dumps({"docs": int(docs)}))
+        self._update_meta(ipath, docs=None if docs is None else int(docs))
 
     @staticmethod
     def _nonempty_sparse(sv_col: str):
@@ -3986,8 +3829,8 @@ class VechordRegistry:
     def extend_sparse_index(self, name: str) -> int:
         """Assignment-free sparse index maintenance: postings for rows
         appended since the build/last extend append as new files (the
-        file-ledger fast path reads ONLY the new table files; the pk
-        anti-join fallback covers rewritten history). Appended files
+        log delta reads ONLY the new table files; the pk anti-join
+        fallback covers rewritten history). Appended files
         are individually idx-sorted — footer pruning stays effective,
         and :meth:`compact_index` re-clusters the whole layout when
         fragmentation accumulates. Holds the maintenance lock (same
@@ -3998,16 +3841,15 @@ class VechordRegistry:
         if pk is None:
             raise SchemaError("extend_sparse_index needs a primary key")
         with self._maintenance_lock(ipath):
-            new, covered = self._new_rows_since_index(name, ipath)
+            new, snap = self._new_rows_since_index(name, ipath)
             if new is None:
-                base = self.load(name)
-                covered = sorted(base.inputFiles())
+                base = self._read_files(name, snap.files)
                 indexed = self.spark.read.parquet(
                     str(ipath / "postings")
                 ).select(pk.name).distinct()
                 # NULL sparse cells never enter the postings, so the
                 # anti-join must skip them or they read as "new" on
-                # every ledger-less extend forever
+                # every anti-join extend forever
                 new = base.filter(F.col(sv.name).isNotNull()).join(
                     indexed, pk.name, "left_anti"
                 )
@@ -4027,7 +3869,7 @@ class VechordRegistry:
                     "idx"
                 ).write.mode("append").parquet(str(ipath / "postings"))
             self._set_sparse_docs(ipath, None if docs is None else docs + n["docs"])
-            self._record_index_files(name, ipath, files=covered)
+            self._record_coverage(ipath, snap.version)
             return n_new
 
     def _sparse_postings(self, name: str) -> DataFrame:

@@ -35,6 +35,7 @@ import base64
 import datetime
 import decimal
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Mapping
@@ -42,8 +43,11 @@ from urllib.parse import parse_qsl, urlsplit
 
 from pyspark.sql import DataFrame
 
-from vechord_spark.errors import MaintenanceBusy, SchemaError
+from vechord_spark.errors import MaintenanceBusy, SchemaError, UniqueViolation
+from vechord_spark.plans.commitlog import CommitConflict
 from vechord_spark.registry import VechordRegistry
+
+log = logging.getLogger("vechord_spark.service")
 
 MAX_ROWS_DEFAULT = 1000
 
@@ -216,9 +220,11 @@ class VechordService:
                     path.removeprefix("/api/maintenance/"), body
                 )
             raise ServiceError(404, f"no route for {method} {path}")
-        except MaintenanceBusy as err:
-            # another session holds the index maintenance lock: the
-            # operation is safe to retry, signal 409 Conflict
+        except (MaintenanceBusy, CommitConflict, UniqueViolation) as err:
+            # a conflict with the stored state: another session holds
+            # the index maintenance lock or kept winning the table's
+            # commit race (both safe to retry), or the row's unique key
+            # is taken — 409 Conflict
             return 409, "text/plain", str(err).encode()
         except ServiceError as err:
             return err.status, "text/plain", str(err).encode()
@@ -227,6 +233,7 @@ class VechordService:
             # validation (vechord/service.py:55-61)
             return 422, "text/plain", f"Validation error: {err}".encode()
         except Exception as err:  # uncaught -> 500 with safe message
+            log.exception("%s %s failed", method, path)
             return 500, "text/plain", f"{type(err).__name__}: {err}".encode()
 
     # -------------------------------------------------------------- tables

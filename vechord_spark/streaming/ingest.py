@@ -300,7 +300,7 @@ def stream_to_registry(
     ``maintain_every=N`` runs :meth:`registry.maintain` after every
     N-th appended micro-batch — the streaming face of the index
     lifecycle: persisted IVF/BM25/sparse layouts extend O(appended
-    rows) via the file ledger as the stream runs, so probe/postings
+    rows) from the table's commit log as the stream runs, so probe/postings
     searches stay current without an external scheduler. Every
     maintain step is gated on measured signals, so a quiet stream
     pays only the stats reads and one table row count; a concurrent
@@ -309,7 +309,11 @@ def stream_to_registry(
     and maintenance is never load-bearing for correctness of the
     appended data).
 
-    Single-writer contract per table, same as batch append.
+    Each micro-batch is one commit of the table's log, like batch
+    append, so concurrent writers to the same table both land. The
+    ``on_conflict='ignore'`` probe reads the snapshot before the
+    commit, so two writers racing the SAME new key can both land it;
+    under ``'error'`` the commit's re-check raises for the loser.
     """
     if on_conflict not in ("ignore", "error"):
         raise ValueError(f"on_conflict must be ignore|error, got {on_conflict!r}")

@@ -8801,7 +8801,7 @@ def corpus_funnel_report(spark, sf_dir):
 # whichever session first touches it), then loaded by every later
 # session, mirroring what a production wave persists at day-1 close.
 # Same build-once/extend ledger contract as the registry's
-# .bm25/.ivf index layouts (registry.py:_record_index_files); the
+# .bm25/.ivf index layouts (registry.py:_record_coverage); the
 # in-process memo below only avoids re-reading the parquet within one
 # session.
 _INC_SEEN_CACHE: dict = {}
